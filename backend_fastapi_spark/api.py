@@ -64,17 +64,10 @@ class Engine:
         )
 
     # -- vector -----------------------------------------------------------
-    def _queries_df(self, query_vec: list[float]) -> DataFrame:
-        # numeric q_id (outside the corpus id space) so exclude-self
-        # comparisons against bigint corpus ids stay type-consistent
-        return self.spark.createDataFrame(
-            [(-1, [float(x) for x in query_vec])], ["q_id", "q_embedding"]
-        )
-
     def knn(self, query_vec: list[float], k: int = 5, metric: str = "dot") -> DataFrame:
         return V.knn_exact(
             self.table("embeddings"),
-            self._queries_df(query_vec),
+            V.query_frame(self.spark, query_vec),
             k=k,
             metric=metric,
             exclude_self=False,
@@ -109,7 +102,11 @@ class Engine:
             "doc_id", "source", "text", "embedding"
         )
         return rag_retrieve(
-            chunks, self._queries_df(query_vec), anchors, top_k=top_k, **kwargs
+            chunks,
+            V.query_frame(self.spark, query_vec),
+            anchors,
+            top_k=top_k,
+            **kwargs,
         )
 
     def rag_text(self, query: str, top_k: int = 5, **kwargs) -> DataFrame:
@@ -132,7 +129,11 @@ class Engine:
         )
         qvec = _hash_embed_one("passage: " + query, dim=64)
         return rag_retrieve(
-            chunks, self._queries_df(qvec), anchors, top_k=top_k, **kwargs
+            chunks,
+            V.query_frame(self.spark, qvec),
+            anchors,
+            top_k=top_k,
+            **kwargs,
         )
 
     # -- lexical / hybrid retrieval ----------------------------------------
@@ -178,7 +179,7 @@ class Engine:
         )
         vec = V.knn_exact(
             self.table("embeddings"),
-            self._queries_df(query_vec),
+            V.query_frame(self.spark, query_vec),
             k=pool,
             exclude_self=False,
         ).select("q_id", F.col("vec_id").alias("doc_id"), "score_i64")
@@ -197,7 +198,7 @@ class Engine:
 
         return RT.mmr_topk(
             self.table("embeddings"),
-            self._queries_df(query_vec),
+            V.query_frame(self.spark, query_vec),
             shortlist=shortlist,
             select=k,
         ).select("mmr_rank", "vec_id", "rel_i64")

@@ -24,7 +24,12 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from backend_fastapi_spark.operators.text import shingles, words
-from backend_fastapi_spark.operators.util import ensure_parallelism, materialize
+from backend_fastapi_spark.operators.util import (
+    bounded_collect,
+    ensure_parallelism,
+    local_frame,
+    materialize,
+)
 
 
 def exact_dup_groups(
@@ -263,7 +268,7 @@ def _cc_driver_union_find(e: DataFrame, rows: list) -> DataFrame:
     component-min) contract as the distributed loop. At small edge
     counts the distributed loop's cost is ALL fixed job overhead
     (2 shuffles + a checkpoint per round); this is pure driver work
-    plus one createDataFrame. ``e`` supplies only schema/session."""
+    plus one ``local_frame``. ``e`` supplies only schema/session."""
     parent: dict = {}
 
     def find(x):
@@ -310,7 +315,7 @@ def _cc_driver_union_find(e: DataFrame, rows: list) -> DataFrame:
     schema = T.StructType(
         [T.StructField("id", id_type), T.StructField("cluster_id", id_type)]
     )
-    return e.sparkSession.createDataFrame(out, schema)
+    return local_frame(e.sparkSession, out, schema)
 
 
 def connected_components(
@@ -372,16 +377,12 @@ def connected_components(
     # driver_max_edges=0 disables the short-circuit entirely (tests use it
     # to force the distributed loop, including on empty edge lists).
     # The short-circuit decision and the union-find input are ONE
-    # bounded limit-collect off the checkpointed rows (r14): the
-    # previous count-then-collect paid two driver jobs where small
-    # graphs — the common case — need one. coalesce(1) pins the collect
-    # to a single job: a bare limit().collect() runs executeTake's
-    # incremental partition ramp (1, 4, 16, ... — several jobs on a
-    # many-partition small table), while one task lazily chains the
-    # checkpointed blocks and stops consuming at the bound, so an
-    # over-bound graph costs one bounded sequential read, not a funnel.
+    # bounded collect off the checkpointed rows (r14): the previous
+    # count-then-collect paid two driver jobs where small graphs — the
+    # common case — need one, and an over-bound graph costs one bounded
+    # sequential read, not a funnel.
     if 0 < driver_max_edges:
-        rows = e.coalesce(1).limit(driver_max_edges + 1).collect()
+        rows = bounded_collect(e, driver_max_edges)
         if len(rows) <= driver_max_edges:
             stats["edges"] = len(rows)
             return _cc_driver_union_find(e, rows)

@@ -23,7 +23,7 @@ from pyspark.ml.functions import array_to_vector, vector_to_array
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from backend_fastapi_spark.operators.util import bounded_collect
+from backend_fastapi_spark.operators.util import bounded_collect, local_frame
 from backend_fastapi_spark.operators.vector import knn_exact
 
 # Fold segments own the ``batch=fold-<seq>`` namespace; the strict match
@@ -100,11 +100,10 @@ def build_ivf(
     assigned = model.transform(with_vec).withColumnRenamed(
         "prediction", "cluster"
     ).drop("features")
-    centroids = (
-        df.sparkSession.createDataFrame(
-            [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
-            ["cluster", "centroid"],
-        )
+    centroids = local_frame(
+        df.sparkSession,
+        [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
+        "cluster long, centroid array<double>",
     )
     return assigned, centroids
 
@@ -746,7 +745,7 @@ def _probe_frames(
     spark, centroids: DataFrame, queries: DataFrame, rows: list
 ) -> tuple[DataFrame, list[int]]:
     """(probe DataFrame (q_id, cluster), sorted distinct cluster ids)
-    from _centroid_probe rows — a local relation, no extra jobs."""
+    from _centroid_probe rows — a ``local_frame``, no extra jobs."""
     from pyspark.sql import types as T
 
     schema = T.StructType(
@@ -755,7 +754,7 @@ def _probe_frames(
             T.StructField("cluster", centroids.schema["cluster"].dataType),
         ]
     )
-    probe = spark.createDataFrame([(q, c) for q, c, _ in rows], schema)
+    probe = local_frame(spark, [(q, c) for q, c, _ in rows], schema)
     return probe, sorted({int(c) for _, c, _ in rows})
 
 
@@ -795,10 +794,7 @@ def ivf_search_persisted(
         # form ran the probe plan once for the distinct-collect and
         # AGAIN embedded in the search plan.
         probe_rows, q_quant = _collect_probe_pairs(probe)
-        probed = sorted({int(c) for _, c in probe_rows or []}) or [
-            int(r["cluster"])
-            for r in probe.select("cluster").distinct().collect()
-        ]
+        probed = _probed_clusters(probe, probe_rows)
     lists = read_ivf_lists(spark, path).filter(F.col("cluster").isin(probed))
     return ivf_search_over(
         lists, probe, queries, k=k, corpus_id=corpus_id,
@@ -814,6 +810,18 @@ def _collect_probe_pairs(probe: DataFrame, bound: int = 4_000_000):
     if len(rows) > bound:
         return None, None
     return [(r["q_id"], r["cluster"]) for r in rows], None
+
+
+def _probed_clusters(probe: DataFrame, probe_rows: list | None) -> list[int]:
+    """Sorted distinct cluster ids of a probe. ``probe_rows`` None (over
+    the collect bound) reads them off the probe plan; an empty list (zero
+    queries) probes nothing and runs no job."""
+    if probe_rows is None:
+        return sorted(
+            int(r["cluster"])
+            for r in probe.select("cluster").distinct().collect()
+        )
+    return sorted({int(c) for _, c in probe_rows})
 
 
 def ivf_search_persisted_adaptive(
@@ -881,10 +889,7 @@ def ivf_search_persisted_adaptive(
             .select("q_id", "cluster")
         )
         probe_rows, q_quant = _collect_probe_pairs(probe)
-        probed = sorted({int(c) for _, c in probe_rows or []}) or [
-            int(r["cluster"])
-            for r in probe.select("cluster").distinct().collect()
-        ]
+        probed = _probed_clusters(probe, probe_rows)
     lists = read_ivf_lists(spark, path).filter(F.col("cluster").isin(probed))
     return ivf_search_over(
         lists, probe, queries, k=k, corpus_id=corpus_id,

@@ -41,6 +41,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from backend_fastapi_spark.operators.util import local_frame, materialize
+
 # --- HyperLogLog (p=8 -> m=256 registers, ~6.5% std error) ------------
 HLL_P = 8
 HLL_M = 1 << HLL_P  # 256 registers
@@ -348,8 +350,6 @@ def cms_topk(df: DataFrame, key_col: str, k: int = 20) -> DataFrame:
     # (distinct-keys·d rows) so both downstream consumers (the d·w
     # counter table and the probe set) read the aggregate instead of
     # each re-running the scan+explode+md5 lineage.
-    from backend_fastapi_spark.operators.util import materialize
-
     kc = materialize(
         bucketed.groupBy("key", "i", "bucket").agg(
             F.count(F.lit(1)).alias("ck")
@@ -566,7 +566,8 @@ def kmv_jaccard(
         from pyspark.sql import types as T
 
         g_type = sk.schema["g"].dataType
-        pairs = df.sparkSession.createDataFrame(
+        pairs = local_frame(
+            df.sparkSession,
             [(a, b) for i, a in enumerate(gs) for b in gs[i + 1:]],
             # explicit schema: with < 2 groups the pair list is empty and
             # schema inference would raise instead of returning 0 rows
@@ -612,7 +613,7 @@ def kmv_jaccard(
         # Materialize before unpersisting sk (bounded by the 256-group
         # contract: <= 32,640 pair rows) so the cached sketches are
         # released at function exit instead of leaking for the session.
-        return df.sparkSession.createDataFrame(out.collect(), out.schema)
+        return local_frame(df.sparkSession, out.collect(), out.schema)
     finally:
         sk.unpersist()
 
@@ -704,8 +705,6 @@ def bloom_prejoin_stats(
     exchange the exact semi-join would pay, while the filter itself can
     be pushed below it at 100 TB (probe pass-rate here measures exactly
     what such a pushdown would keep)."""
-    from backend_fastapi_spark.operators.util import materialize
-
     # Materialize once: the member distinct feeds the count action, the
     # filter build, AND the audit join; the filter feeds the probe join
     # AND the bits_set report — without this each consumer re-runs the
@@ -940,7 +939,8 @@ def kmv_set_cardinalities(
                 "enumeration is quadratic in the group dimension (<= 256)"
             )
         g_type = sk.schema["g"].dataType
-        pairs = df.sparkSession.createDataFrame(
+        pairs = local_frame(
+            df.sparkSession,
             [(a, b) for i, a in enumerate(gs) for b in gs[i + 1:]],
             T.StructType(
                 [
@@ -995,7 +995,7 @@ def kmv_set_cardinalities(
         # result is bounded by the 256-group contract (<= 32,640 pair
         # rows), so the driver round-trip is a constant-size local
         # relation, not a scale hazard.
-        return df.sparkSession.createDataFrame(out.collect(), out.schema)
+        return local_frame(df.sparkSession, out.collect(), out.schema)
     finally:
         sk.unpersist()
 

@@ -45,6 +45,49 @@ def bounded_collect(df: DataFrame, bound: int) -> list:
     return df.coalesce(1).limit(bound + 1).collect()
 
 
+def local_frame(spark, rows, schema) -> DataFrame:
+    """Driver-side rows as a DataFrame — the inverse of ``bounded_collect``
+    and the package's one way to bring Python rows into Spark.
+
+    ``spark.createDataFrame(rows, schema)`` over a Python list plans a
+    ``LogicalRDD`` of pickled rows: every job that scans it starts Python
+    workers just to unpickle them, about a second per job on a warm
+    4-core session even for ONE row, and the optimizer cannot fold it.
+    Built from an Arrow table instead, Spark plans a ``LocalRelation``
+    (below ``spark.sql.execution.arrow.localRelationThreshold``, 48 MB by
+    default) and a JVM-side Arrow scan above it — no Python worker
+    either way.
+
+    ``rows`` are tuples or ``Row``s in ``schema`` field order; ``schema``
+    is a ``StructType`` or a DDL string (``"q_id long, term string"``).
+    Nulls, null array elements and an empty ``rows`` keep the schema.
+    Naive ``datetime``s in top-level timestamp columns are read in the
+    system time zone, as ``createDataFrame`` reads them."""
+    import datetime as dt
+
+    import pyarrow as pa
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T._parse_datatype_string(schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(schema.fields)
+    if len(cols) != len(schema.fields):
+        raise ValueError(
+            f"local_frame: rows have {len(cols)} fields, schema has "
+            f"{len(schema.fields)}"
+        )
+    arrays = []
+    for col, field, afield in zip(cols, schema.fields, arrow_schema):
+        if isinstance(field.dataType, T.TimestampType):
+            col = [v if v is None else v.astimezone(dt.timezone.utc) for v in col]
+        arrays.append(pa.array(col, type=afield.type))
+    return spark.createDataFrame(
+        pa.Table.from_arrays(arrays, schema=arrow_schema), schema
+    )
+
+
 def materialize(df: DataFrame) -> DataFrame:
     """Cut lineage and materialize a small intermediate that multiple plan
     branches will re-read (e.g. MinHash/SimHash signatures read by every

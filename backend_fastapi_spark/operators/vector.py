@@ -30,6 +30,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from backend_fastapi_spark.operators.util import (
+    bounded_collect,
+    ensure_parallelism,
+    local_frame,
+)
+
 FIXED_SCALE = 1_000_000  # 1e6 per element → dot values ≤ 1e12·dim, safe in int64
 
 
@@ -123,6 +129,17 @@ def l2_to_sim(dist: Column) -> Column:
     return F.lit(1.0) / (F.lit(1.0) + dist)
 
 
+def query_frame(spark, query_vec) -> DataFrame:
+    """One query vector as ``knn_exact``'s (q_id, q_embedding) input. The
+    numeric q_id -1 sits outside the corpus id space, so exclude-self
+    comparisons against bigint corpus ids stay type-consistent."""
+    return local_frame(
+        spark,
+        [(-1, [float(x) for x in query_vec])],
+        "q_id long, q_embedding array<double>",
+    )
+
+
 def knn_exact(
     corpus: DataFrame,
     queries: DataFrame,
@@ -141,8 +158,6 @@ def knn_exact(
     J4/V3 analog: the reference's 1×N FAISS scan generalizes to Q×N with
     the corpus staying partitioned in place and no scored-pair shuffle.
     """
-    from backend_fastapi_spark.operators.util import ensure_parallelism
-
     import numpy as np
     import pandas as pd
 
@@ -152,7 +167,6 @@ def knn_exact(
     # to every other scorer) before crossing to numpy, so no Python-side
     # rounding can diverge.
     MAX_QUERY_ROWS = 100_000  # ~50 MB at 64 dims — broadcast-sized
-    from backend_fastapi_spark.operators.util import bounded_collect
 
     q_quant = bounded_collect(
         queries.select(
@@ -324,8 +338,6 @@ def near_dup_pairs_matmul(
     import numpy as np
     import pandas as pd
 
-    from backend_fastapi_spark.operators.util import ensure_parallelism
-
     quantized = ensure_parallelism(df).select(
         F.col(block_col).alias("_blk"),
         F.col(id_col).alias("_id"),
@@ -460,7 +472,6 @@ def near_dup_pairs(
             "allow_cross_join=True for tiny inputs, or use "
             "lsh.ann_similarity_join (the scale path)"
         )
-    from backend_fastapi_spark.operators.util import ensure_parallelism
 
     quantized = ensure_parallelism(df).withColumn(
         "_qvec", F.transform(F.col(vec_col), _fx)
@@ -615,7 +626,6 @@ def sq8_topk(
     decides the final ranking."""
     MAX_QUERY_ROWS = 100_000
     qcodes = sq8_codes(queries, id_col="q_id", vec_col="q_embedding")
-    from backend_fastapi_spark.operators.util import bounded_collect
 
     qrows = bounded_collect(
         qcodes.join(queries.select("q_id", "q_embedding"), "q_id"),
@@ -644,8 +654,6 @@ def sq8_topk(
 
     import numpy as np
     import pandas as pd
-
-    from backend_fastapi_spark.operators.util import ensure_parallelism
 
     q_ids = [r["q_id"] for r in qrows]
     QC = np.stack(
@@ -698,7 +706,8 @@ def sq8_topk(
         .filter(F.col("_rn") <= rerank * k)
         .drop("_rn")
     )
-    qvecs = corpus.sparkSession.createDataFrame(
+    qvecs = local_frame(
+        corpus.sparkSession,
         [(r["q_id"], [float(x) for x in r["q_embedding"]]) for r in qrows],
         "q_id " + dict(queries.dtypes)["q_id"] + ", q_embedding array<double>",
     )

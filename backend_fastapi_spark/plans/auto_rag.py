@@ -61,10 +61,9 @@ def run_auto_rag(
         F.col("index_name") == index_name
     )
     qvec = _hash_embed_one("passage: " + query, dim=64)
-    qdf = spark.createDataFrame([(-1, qvec)], ["q_id", "q_embedding"])
     retrieved = V.knn_exact(
         index.select("chunk_id", "doc_id", "title", "text", "embedding"),
-        qdf,
+        V.query_frame(spark, qvec),
         k=top_k,
         corpus_id="chunk_id",
         exclude_self=False,

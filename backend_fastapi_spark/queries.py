@@ -32,6 +32,7 @@ from backend_fastapi_spark.operators import pq as PQ
 from backend_fastapi_spark.operators import semdedup as SD
 from backend_fastapi_spark.operators import pipeline as PL
 from backend_fastapi_spark.operators import retrieval as RT
+from backend_fastapi_spark.operators.util import local_frame
 from backend_fastapi_spark.sources.parquet import footer_row_count, read_table
 
 
@@ -3036,7 +3037,9 @@ def q_doc_embed_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         "embedding", embed(ascii_text)
     )
     qdf = (
-        spark.createDataFrame([("q0", "vector search with spark")], ["q_id", "qtext"])
+        local_frame(
+            spark, [("q0", "vector search with spark")], "q_id string, qtext string"
+        )
         .withColumn("q_embedding", embed("qtext"))
         .select("q_id", "q_embedding")
     )
@@ -4819,9 +4822,7 @@ def q_hybrid_search_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     lex_dir = os.path.join(_INDEX_ROOT, sf_tag, "hybrid_lex_index")
     ivf_dir = os.path.join(_INDEX_ROOT, sf_tag, "hybrid_ivf_index")
     terms = ["vector", "stream", "window", "hash"]
-    qmap = spark.createDataFrame(
-        list(enumerate(terms)), "q_id long, term string"
-    )
+    qmap = local_frame(spark, list(enumerate(terms)), "q_id long, term string")
 
     def build():
         write_postings_index(
@@ -4953,9 +4954,7 @@ def q_hybrid_rag_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     lex_dir = os.path.join(_INDEX_ROOT, sf_tag, "e2e_lex_index")
     ivf_dir = os.path.join(_INDEX_ROOT, sf_tag, "e2e_ivf_index")
     terms = ["vector", "stream", "window", "hash"]
-    qmap = spark.createDataFrame(
-        list(enumerate(terms)), "q_id long, term string"
-    )
+    qmap = local_frame(spark, list(enumerate(terms)), "q_id long, term string")
 
     def build():
         write_postings_index(
@@ -7989,8 +7988,10 @@ def q_zorder_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         for col, (lo, hi) in _ZORDER_BOXES.items()
         for rep in (M.skipping_report(path, col, lo, hi),)
     ]
-    return spark.createDataFrame(
-        rows, "layout string, col string, row_groups long, overlapping long"
+    return local_frame(
+        spark,
+        rows,
+        "layout string, col string, row_groups long, overlapping long",
     ).orderBy("layout", "col")
 
 
@@ -8240,8 +8241,8 @@ def q_maintenance_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         for layout, path in (("scattered", scattered), ("clustered", clustered))
         for rep in (M.skipping_report(path, "o_orderkey", _MAINT_LO, _MAINT_HI),)
     ]
-    return spark.createDataFrame(
-        rows, "layout string, row_groups long, overlapping long"
+    return local_frame(
+        spark, rows, "layout string, row_groups long, overlapping long"
     )
 
 

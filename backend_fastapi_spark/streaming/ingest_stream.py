@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from backend_fastapi_spark.operators.util import local_frame
 from backend_fastapi_spark.plans.ingest import ingest_table
 
 
@@ -410,7 +411,7 @@ def curate_batch(
     if corpus_dirs:
         state = spark.read.parquet(*[f"{state_path}/{d}" for d in corpus_dirs])
     else:
-        state = dedup_state(spark.createDataFrame([], doc_schema))
+        state = dedup_state(local_frame(spark, [], doc_schema))
 
     # Stage 2 — exact dedup: batch-internal md5 group-min (the batch
     # path's row_number policy), then drop anything whose bytes the

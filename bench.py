@@ -50,6 +50,7 @@ import time
 from backend_fastapi_spark.core.session import get_spark
 from backend_fastapi_spark import queries as Q
 from backend_fastapi_spark.operators import dedup as D
+from backend_fastapi_spark.operators.util import local_frame
 
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
@@ -258,7 +259,9 @@ def time_set(spark, names, sf_dir, runs, timings, cards, cc_stats, tag="",
                     job_counts[name] = len(ids)
                 except Exception:
                     pass
-            spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+            # clears the description too, which would otherwise tag
+            # every later job on this thread
+            spark.sparkContext.setJobGroup(None, None)
         timings[name] = round(best, 3)
         cards[name] = rows
         if loads is not None:
@@ -328,7 +331,7 @@ def ivf_probe_stanza(spark, sf_dir: str, k_clusters: int | None = None,
     q = emb.orderBy("vec_id").limit(n_queries).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_embedding")
     )
-    queries = spark.createDataFrame(q.collect(), q.schema)
+    queries = local_frame(spark, q.collect(), q.schema)
 
     t0 = time.perf_counter()
     assigned, centroids = build_ivf(
@@ -488,7 +491,7 @@ def ivf_delta_curve_stanza(spark, sf_dir: str,
     q = emb.orderBy("vec_id").limit(n_queries).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_embedding")
     )
-    queries = spark.createDataFrame(q.collect(), q.schema)
+    queries = local_frame(spark, q.collect(), q.schema)
 
     t0 = time.perf_counter()
     assigned, centroids = build_ivf(
@@ -658,7 +661,7 @@ def ann_recall_curves(spark, emb, n_queries: int = 16, k: int = 10,
     q = emb.orderBy("vec_id").limit(n_queries).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_embedding")
     )
-    queries = spark.createDataFrame(q.collect(), q.schema)
+    queries = local_frame(spark, q.collect(), q.schema)
     exact = {
         (r["q_id"], r["vec_id"])
         for r in knn_exact(emb, queries, k=k, exclude_self=False).collect()
@@ -798,7 +801,7 @@ def text_ann_sq8_stanza(spark, sf_dir: str, dim: int = 64,
     q = emb.orderBy("vec_id").limit(n_queries).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_embedding")
     )
-    queries = spark.createDataFrame(q.collect(), q.schema)
+    queries = local_frame(spark, q.collect(), q.schema)
     exact = {
         (r["q_id"], r["vec_id"])
         for r in knn_exact(emb, queries, k=k, exclude_self=False).collect()
@@ -907,7 +910,7 @@ def ivf_rebuild_stanza(spark, sf_dir: str) -> dict:
     q = emb.orderBy("vec_id").limit(8).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_embedding")
     )
-    queries = spark.createDataFrame(q.collect(), q.schema)
+    queries = local_frame(spark, q.collect(), q.schema)
 
     t0 = time.perf_counter()
     assigned, centroids = build_ivf(

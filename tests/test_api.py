@@ -1292,3 +1292,14 @@ def test_grouped_pairs_matches_join_form_and_tolerates_dups(spark):
     )
     assert got == ref
     assert (2, 6) in got and all(x != y for x, y in got)
+
+
+def test_probed_clusters_distinguishes_empty_from_over_bound(spark):
+    from backend_fastapi_spark.operators.ivf import _probed_clusters
+
+    probe = spark.range(5).selectExpr("id AS q_id", "id % 2 AS cluster")
+    # None: the probe was over the collect bound, so the ids come off the plan
+    assert _probed_clusters(probe, None) == [0, 1]
+    # []: zero queries probe nothing (no fallback to the plan's ids)
+    assert _probed_clusters(probe, []) == []
+    assert _probed_clusters(probe, [(0, 1), (1, 1), (1, 0)]) == [0, 1]
