@@ -13,19 +13,44 @@ One object wraps the capabilities the reference exposes over HTTP routes
 
 Temp views are registered for every testdata table, so ``eng.sql`` covers
 the whole ad-hoc surface.
+
+Substrates. What a served request derives from the corpus without looking
+at the query is built once per ``Engine`` and reused, the way the
+reference keeps its FAISS/Chroma indexes loaded for the process lifetime:
+
+- table handles: ``eng.table(name)`` returns the same DataFrame (no
+  repeated parquet schema inference), not cached;
+- vectors: ``embeddings`` spread over the session's cores, cached — the
+  corpus of ``knn``, ``mmr`` and ``hybrid_search``;
+- passages: ``documents`` spread over the cores plus their ``passage:``
+  hashing embedding, cached — the corpus of ``rag_text``;
+- postings: the BM25 inverted index of ``documents``, cached — read by
+  ``keyword_search`` and ``hybrid_search``.
+
+Each is built on first use (``Engine.open`` builds nothing) and is keyed
+on the file listing (path, size, mtime) of the tables it reads: when a
+table's files change, the next call unpersists the stale substrate and
+rebuilds it. A cached plan is session-wide — Spark substitutes it into
+any later query with the same plan — so ``eng.close()`` unpersists every
+substrate; close an Engine when done with it.
 """
 
 from __future__ import annotations
 
 import math
-from dataclasses import dataclass
+import os
+import threading
+from dataclasses import dataclass, field
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from backend_fastapi_spark.core.catalog import Catalog
 from backend_fastapi_spark.operators import dedup as D
+from backend_fastapi_spark.operators import retrieval as RT
 from backend_fastapi_spark.operators import vector as V
+from backend_fastapi_spark.operators.util import ensure_parallelism
 from backend_fastapi_spark.plans.ingest import ingest_table, write_index
 from backend_fastapi_spark.plans.rag_retrieval import rag_retrieve
 from backend_fastapi_spark.plans.user_context import user_context
@@ -40,10 +65,37 @@ def _norm_terms(terms: "list[str] | str") -> list[str]:
     return [t.strip().lower() for t in terms if t.strip()]
 
 
+def _listing(path: str) -> tuple:
+    """(path, size, mtime_ns) of every file of a table — one parquet file
+    or a directory of parts; () when the path is missing."""
+    if os.path.isdir(path):
+        files = [
+            os.path.join(root, f)
+            for root, _dirs, names in os.walk(path)
+            for f in names
+        ]
+    elif os.path.exists(path):
+        files = [path]
+    else:
+        return ()
+    out = []
+    for p in sorted(files):
+        st = os.stat(p)
+        out.append((p, st.st_size, st.st_mtime_ns))
+    return tuple(out)
+
+
 @dataclass
 class Engine:
     spark: SparkSession
     catalog: Catalog
+    # substrate key -> (file listing it was built from, frame, persisted)
+    _substrates: dict = field(default_factory=dict, repr=False, compare=False)
+    # one build per substrate when request threads share the Engine
+    # (reentrant: a substrate's build reads table handles)
+    _lock: threading.RLock = field(
+        default_factory=threading.RLock, repr=False, compare=False
+    )
 
     @classmethod
     def open(cls, spark: SparkSession, sf_dir: str) -> "Engine":
@@ -51,12 +103,81 @@ class Engine:
         cat.register_all()
         return cls(spark, cat)
 
+    def close(self) -> None:
+        """Unpersist every cached substrate and forget the table handles.
+        The Engine stays usable: the next call rebuilds what it needs."""
+        with self._lock:
+            for _listed, df, persisted in self._substrates.values():
+                if persisted:
+                    df.unpersist()
+            self._substrates.clear()
+
+    def _substrate(
+        self,
+        key: str,
+        tables: tuple[str, ...],
+        build: Callable[[], DataFrame],
+        persist: bool = True,
+    ) -> DataFrame:
+        """The memoized frame ``build()`` for ``key`` while the files of
+        ``tables`` are unchanged. A changed listing unpersists the stale
+        frame BEFORE the rebuild: Spark matches cached plans by their
+        table paths, so a stale cache entry would otherwise be
+        substituted into the rebuilt plan."""
+        listed = tuple(_listing(self.catalog.path(t)) for t in tables)
+        with self._lock:
+            held = self._substrates.get(key)
+            if held is not None:
+                if held[0] == listed:
+                    return held[1]
+                if held[2]:
+                    held[1].unpersist()
+            df = build()
+            if persist:
+                df = df.persist()
+            self._substrates[key] = (listed, df, persist)
+            return df
+
+    def _vectors(self) -> DataFrame:
+        return self._substrate(
+            "vectors",
+            ("embeddings",),
+            lambda: ensure_parallelism(self.table("embeddings")),
+        )
+
+    def _passages(self) -> DataFrame:
+        from backend_fastapi_spark.functions.embedder import hashing_embedder
+
+        def build() -> DataFrame:
+            # spread BEFORE the embedding UDF, so the build embeds the
+            # corpus on every core instead of in the single scan task
+            embed = hashing_embedder(dim=64)
+            docs = self.table("documents").select("doc_id", "source", "text")
+            return ensure_parallelism(docs).withColumn(
+                "embedding",
+                embed(F.concat(F.lit("passage: "), F.col("text"))),
+            )
+
+        return self._substrate("passages", ("documents",), build)
+
+    def _postings(self) -> DataFrame:
+        return self._substrate(
+            "postings",
+            ("documents",),
+            lambda: RT.postings(self.table("documents")),
+        )
+
     # -- relational -------------------------------------------------------
     def sql(self, query: str) -> DataFrame:
         return self.spark.sql(query)
 
     def table(self, name: str) -> DataFrame:
-        return self.catalog.table(name)
+        return self._substrate(
+            f"table:{name}",
+            (name,),
+            lambda: self.catalog.table(name),
+            persist=False,
+        )
 
     def user_context(self, recent_n: int = 10) -> DataFrame:
         return user_context(
@@ -66,7 +187,7 @@ class Engine:
     # -- vector -----------------------------------------------------------
     def knn(self, query_vec: list[float], k: int = 5, metric: str = "dot") -> DataFrame:
         return V.knn_exact(
-            self.table("embeddings"),
+            self._vectors(),
             V.query_frame(self.spark, query_vec),
             k=k,
             metric=metric,
@@ -114,22 +235,12 @@ class Engine:
         extraction, query+document embedding in the same (deterministic)
         space, then the full retrieval plan."""
         from backend_fastapi_spark.functions.anchors import strong_anchors
-        from backend_fastapi_spark.functions.embedder import (
-            _hash_embed_one,
-            hashing_embedder,
-        )
-        from backend_fastapi_spark.plans.rag_retrieval import rag_retrieve
+        from backend_fastapi_spark.functions.embedder import _hash_embed_one
 
         anchors = strong_anchors(query) or [query.lower()]
-        embed = hashing_embedder(dim=64)
-        chunks = (
-            self.table("documents")
-            .select("doc_id", "source", "text")
-            .withColumn("embedding", embed(F.concat(F.lit("passage: "), F.col("text"))))
-        )
         qvec = _hash_embed_one("passage: " + query, dim=64)
         return rag_retrieve(
-            chunks,
+            self._passages(),
             V.query_frame(self.spark, qvec),
             anchors,
             top_k=top_k,
@@ -142,9 +253,10 @@ class Engine:
         keyword half of the reference's retrieval surface
         (tool_definitions.py:12) as a ranked result instead of a contains
         filter. → (term, doc_id, bm25)."""
-        from backend_fastapi_spark.operators import retrieval as RT
-
-        return RT.bm25_topk(self.table("documents"), _norm_terms(terms), k=k)
+        return RT.bm25_topk(
+            self.table("documents"), _norm_terms(terms), k=k,
+            post=self._postings(),
+        )
 
     def hybrid_search(
         self,
@@ -157,8 +269,6 @@ class Engine:
         cosine kNN, fused by reciprocal-rank (k=60) — the
         hybrid_rrf_topk plan shape behind a single call.
         → (doc_id, rrf) best-first."""
-        from backend_fastapi_spark.operators import retrieval as RT
-
         from pyspark.sql import Window
 
         terms = _norm_terms(terms)
@@ -174,11 +284,11 @@ class Engine:
                 "q_id", "doc_id", "r"
             )
 
-        kw = RT.bm25_score_query(self.table("documents"), terms).withColumn(
-            "q_id", F.lit(-1)
-        )
+        kw = RT.bm25_score_query(
+            self.table("documents"), terms, post=self._postings()
+        ).withColumn("q_id", F.lit(-1))
         vec = V.knn_exact(
-            self.table("embeddings"),
+            self._vectors(),
             V.query_frame(self.spark, query_vec),
             k=pool,
             exclude_self=False,
@@ -194,10 +304,8 @@ class Engine:
         """MMR-diversified top-k (λ=.5) over the exact-kNN shortlist —
         the retrieve-then-diversify rerank between recall and prompt
         assembly. → (mmr_rank, vec_id, rel_i64)."""
-        from backend_fastapi_spark.operators import retrieval as RT
-
         return RT.mmr_topk(
-            self.table("embeddings"),
+            self._vectors(),
             V.query_frame(self.spark, query_vec),
             shortlist=shortlist,
             select=k,

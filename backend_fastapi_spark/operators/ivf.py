@@ -657,9 +657,12 @@ def rebuild_ivf_index(
 # problem size, not local core count. Each collected side is ALSO
 # bounded with limit(N+1) BEFORE materializing (ADVICE r13 medium: a
 # contract-violating oversized queries frame must hit the fallback,
-# never a driver OOM).
+# never a driver OOM). The queries side is bounded by ``MAX_QUERY_ROWS``,
+# the bound ivf_search_over collects under itself: the probe hands the
+# scorer its collected query matrix, which rides in every task's closure.
 _PROBE_DRIVER_MAX_PAIRS = 4_000_000
 _PROBE_DRIVER_MAX_SIDE = 200_000
+MAX_QUERY_ROWS = 100_000  # ~50 MB at 64 dims — broadcast-sized
 
 
 def _centroid_probe(
@@ -702,9 +705,9 @@ def _centroid_probe(
                 F.col(query_vec_col), lambda x: _fx(x).cast("double")
             ).alias("_qv"),
         ),
-        _PROBE_DRIVER_MAX_SIDE,
+        MAX_QUERY_ROWS,
     )
-    if len(q_rows) > _PROBE_DRIVER_MAX_SIDE:
+    if len(q_rows) > MAX_QUERY_ROWS:
         return None
     if not c_rows or not q_rows:
         return None
@@ -925,14 +928,15 @@ def ivf_search_over(
     the collects entirely; otherwise both sides are collected BOUNDED
     (limit(N+1) — the knn_exact query-side contract), falling back to
     the broadcast-join + interpreted-dot plan when a pathological probe
-    exceeds the bound."""
+    exceeds the bound. ``q_quant`` holds at most ``MAX_QUERY_ROWS`` rows
+    (``_centroid_probe`` collects under the same bound). The matmul path
+    scores each distinct (q_id, cluster) probe pair once."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import Window
 
     from backend_fastapi_spark.operators.vector import _fx
 
-    MAX_QUERY_ROWS = 100_000
     MAX_PROBE_ROWS = 4_000_000
     if q_quant is None:
         collected = bounded_collect(
@@ -993,8 +997,11 @@ def ivf_search_over(
     q_index = {q: j for j, q in enumerate(q_ids)}
     qmax = float(np.abs(qm).max(initial=0.0))
     dim = qm.shape[1]
-    # cluster -> sorted array of probing-query row indices (dedup'd:
-    # each (q, cluster) pair scores once, as in the equi-join form)
+    # cluster -> sorted array of probing-query row indices. Built from
+    # the DISTINCT (q_id, cluster) probe rows on purpose: a duplicated
+    # probe row scores its cluster once, so one vector can never fill two
+    # of a query's top-k slots (the join fallback below would score it
+    # twice; no caller produces duplicate probe rows)
     c2q: dict = {}
     for q, c in set(probe_rows):
         c2q.setdefault(c, []).append(q_index[q])

@@ -116,6 +116,7 @@ def bm25_topk(
     k: int = 10,
     text_col: str = "text",
     id_col: str = "doc_id",
+    post: DataFrame | None = None,
 ) -> DataFrame:
     """Top-k documents per query term by BM25 → (term, doc_id, bm25).
 
@@ -124,8 +125,11 @@ def bm25_topk(
     frame broadcast, and a per-term window ranks. The window partitions
     on ``term`` — fine for interactive term counts; a thousand-term batch
     would use the per-partition-topk-then-merge form instead.
+    ``post``: a prebuilt :func:`postings` frame of ``docs`` (the Engine's
+    cached one); None builds it here.
     """
-    post = postings(docs, text_col, id_col)
+    if post is None:
+        post = postings(docs, text_col, id_col)
     stats = _corpus_stats(post, id_col)
     hits = post.filter(F.col("term").isin(terms))
     df_tbl = hits.groupBy("term").agg(F.count("*").cast("long").alias("df"))
@@ -199,12 +203,15 @@ def bm25_score_query(
     terms: list[str],
     text_col: str = "text",
     id_col: str = "doc_id",
+    post: DataFrame | None = None,
 ) -> DataFrame:
     """One multi-term query scored against the corpus → (id, kw):
     per-doc decimal-accumulated sum of per-term BM25 over the query's
     terms — :func:`bm25_pairs` with a literal term set instead of a
-    query document. The Engine's hybrid keyword leg."""
-    post = postings(docs, text_col, id_col)
+    query document. The Engine's hybrid keyword leg. ``post`` as in
+    :func:`bm25_topk`."""
+    if post is None:
+        post = postings(docs, text_col, id_col)
     stats = _corpus_stats(post, id_col)
     hits = post.filter(F.col("term").isin(terms))
     df_tbl = hits.groupBy("term").agg(F.count("*").cast("long").alias("df"))

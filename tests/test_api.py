@@ -2,41 +2,247 @@
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import functions as F
 
-from backend_fastapi_spark.api import Engine
 from backend_fastapi_spark.operators import vector as V
 from backend_fastapi_spark.operators.ivf import build_ivf, ivf_search
 from tests.conftest import SF_ORACLE
 
 
-def test_engine_facade_surface(spark):
-    eng = Engine.open(spark, SF_ORACLE)
-    assert eng.sql("SELECT count(*) AS n FROM lineitem").head().n == 60000
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
 
-    ctx = eng.user_context()
-    assert ctx.count() == 1500 and "context" in ctx.columns
 
+def _cold_warm(make):
+    """Rows of a cold call (builds the Engine's substrates) and of a warm
+    one (reads them back); the two must be equal."""
+    cold = _rows(make())
+    assert _rows(make()) == cold
+    return cold
+
+
+def _persistent_rdds(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_engine_facade_surface(spark, open_engine):
+    from backend_fastapi_spark.operators import retrieval as RT
+
+    eng = open_engine(SF_ORACLE)
+    n = _cold_warm(lambda: eng.sql("SELECT count(*) AS n FROM lineitem"))
+    assert n == [(60000,)]
+
+    ctx = _cold_warm(eng.user_context)
+    assert len(ctx) == 1500 and "context" in eng.user_context().columns
+
+    emb = spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet")
+    docs = spark.read.parquet(f"{SF_ORACLE}/documents.parquet")
     qvec = [float(x) for x in eng.table("embeddings").head()["embedding"]]
+    qf = V.query_frame(spark, qvec)
+
     hits = eng.knn(qvec, k=5).collect()
     assert len(hits) == 5 and hits[0].score_i64 >= hits[-1].score_i64
+    assert _cold_warm(lambda: eng.knn(qvec, k=5)) == _rows(
+        V.knn_exact(emb, qf, k=5, exclude_self=False)
+    )
 
-    rag = eng.rag(qvec, anchors=["vector", "stream", "merge"]).collect()
+    kw = _cold_warm(lambda: eng.keyword_search("Vector, stream", k=5))
+    assert {r[0] for r in kw} == {"vector", "stream"}
+    assert kw == _rows(RT.bm25_topk(docs, ["vector", "stream"], k=5))
+
+    hy = _cold_warm(lambda: eng.hybrid_search("vector,stream", qvec, k=5))
+    kw_leg = RT.bm25_score_query(docs, ["vector", "stream"]).withColumn(
+        "q_id", F.lit(-1)
+    )
+    vec_leg = V.knn_exact(emb, qf, k=50, exclude_self=False).select(
+        "q_id", F.col("vec_id").alias("doc_id"), "score_i64"
+    )
+    fused = RT.rrf_fuse(
+        [RT.rank_topn(kw_leg, "kw", 50), RT.rank_topn(vec_leg, "score_i64", 50)]
+    )
+    want = fused.orderBy(F.col("rrf").desc(), "doc_id").limit(5)
+    assert len(hy) == 5 and hy == _rows(want.select("doc_id", "rrf"))
+
+    mm = _cold_warm(lambda: eng.mmr(qvec, k=4))
+    assert [r[0] for r in mm] == [0, 1, 2, 3]
+    assert mm == _rows(
+        RT.mmr_topk(emb, qf, shortlist=20, select=4).select(
+            "mmr_rank", "vec_id", "rel_i64"
+        )
+    )
+
+    rag = _cold_warm(
+        lambda: eng.rag(qvec, anchors=["vector", "stream", "merge"])
+    )
     assert 0 < len(rag) <= 5
-    assert rag[0].line.startswith("《S1》")
+    assert rag[0][-1].startswith("《S1》")  # (q_id, ctx_rank=1, ..., line)
 
-    rep = {r.method: r.n_groups for r in eng.dedup_report().collect()}
+    rep = dict(_cold_warm(eng.dedup_report))
     assert set(rep) == {"exact", "jaccard", "minhash_lsh"}
     assert rep["jaccard"] > 0  # driver planted near-dups
 
 
-def test_engine_rag_text_end_to_end(spark):
-    eng = Engine.open(spark, SF_ORACLE)
-    out = eng.rag_text("vector stream merge query", top_k=5, floor=-1.0).collect()
+def test_engine_rag_text_end_to_end(spark, open_engine):
+    from backend_fastapi_spark.functions.anchors import strong_anchors
+    from backend_fastapi_spark.functions.embedder import (
+        _hash_embed_one,
+        hashing_embedder,
+    )
+    from backend_fastapi_spark.plans.rag_retrieval import rag_retrieve
+
+    eng = open_engine(SF_ORACLE)
+    q = "vector stream merge query"
+    out = _cold_warm(lambda: eng.rag_text(q, top_k=5, floor=-1.0))
     assert 0 < len(out) <= 5
     # anchor filter honored: every kept doc contains a strong anchor
-    for r in out:
+    for r in eng.rag_text(q, top_k=5, floor=-1.0).collect():
         assert any(a in r.line.lower() for a in ["vector", "stream", "merge", "query"])
+    # the cached passages are the corpus embedded as an uncached plan
+    # embeds it
+    embed = hashing_embedder(dim=64)
+    chunks = (
+        spark.read.parquet(f"{SF_ORACLE}/documents.parquet")
+        .select("doc_id", "source", "text")
+        .withColumn("embedding", embed(F.concat(F.lit("passage: "), F.col("text"))))
+    )
+    want = rag_retrieve(
+        chunks,
+        V.query_frame(spark, _hash_embed_one("passage: " + q, dim=64)),
+        strong_anchors(q) or [q.lower()],
+        top_k=5,
+        floor=-1.0,
+    )
+    assert out == _rows(want)
+
+
+def test_engine_warm_rag_text_embeds_no_passage(spark, open_engine, monkeypatch):
+    """The passages substrate embeds the corpus once: a warm rag_text
+    (even with a new query) runs no embedding task."""
+    from pyspark.sql import types as T
+
+    from backend_fastapi_spark.functions import embedder
+
+    embedded = spark.sparkContext.accumulator(0)
+
+    def counting_embedder(dim: int = 64):
+        @F.pandas_udf(T.ArrayType(T.FloatType()))
+        def embed(batch: pd.Series) -> pd.Series:
+            embedded.add(len(batch))
+            return batch.map(lambda t: embedder._hash_embed_one(t or "", dim))
+
+        return embed
+
+    monkeypatch.setattr(embedder, "hashing_embedder", counting_embedder)
+    eng = open_engine(SF_ORACLE)
+    eng.rag_text("vector stream merge query", top_k=5).collect()
+    cold = embedded.value
+    assert cold >= eng.table("documents").count()
+    eng.rag_text("window join shuffle", top_k=5).collect()
+    assert embedded.value == cold
+
+
+def test_engine_close_releases_every_substrate(spark, open_engine):
+    before = _persistent_rdds(spark)
+    eng = open_engine(SF_ORACLE)
+    qvec = [float(x) for x in eng.table("embeddings").head()["embedding"]]
+    eng.knn(qvec, k=5).collect()
+    eng.rag_text("vector stream merge query", top_k=5).collect()
+    eng.keyword_search("vector", k=5).collect()
+    held = [df for _, df, persisted in eng._substrates.values() if persisted]
+    assert len(held) == 3  # vectors, passages, postings
+    assert all(df.storageLevel.useMemory for df in held)
+    assert len(_persistent_rdds(spark) - before) == 3
+    eng.close()
+    assert not any(
+        df.storageLevel.useMemory or df.storageLevel.useDisk for df in held
+    )
+    assert _persistent_rdds(spark) == before
+    # a closed Engine still answers, rebuilding on demand
+    assert len(eng.knn(qvec, k=5).collect()) == 5
+
+
+def test_engine_substrates_build_once_under_threads(open_engine):
+    """Request threads sharing one Engine get one frame per substrate: a
+    second build would persist a frame no close() releases."""
+    import sys
+    import threading
+
+    eng = open_engine(SF_ORACLE)
+    got, errors = [], []
+
+    def worker():
+        try:
+            for _ in range(10):
+                got.append((eng._postings(), eng._vectors(), eng.table("orders")))
+        except Exception as exc:  # surfaced by the assert below
+            errors.append(exc)
+
+    before = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker) for _ in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(before)
+    assert not any(t.is_alive() for t in threads) and not errors
+    assert len(got) == 80
+    for i in range(3):
+        assert len({id(g[i]) for g in got}) == 1
+
+
+def test_engine_substrates_rebuild_when_table_files_change(
+    spark, open_engine, tmp_path
+):
+    import pyarrow.parquet as pq
+
+    from tests.conftest import SF_SMOKE
+
+    docs = pq.read_table(f"{SF_SMOKE}/documents.parquet").slice(0, 60)
+    emb = pq.read_table(f"{SF_SMOKE}/embeddings.parquet").slice(0, 60)
+    # the rewrite: every doc takes its successor's text
+    texts = docs.column("text").to_pylist()
+    rotated = docs.set_column(
+        docs.schema.get_field_index("text"), "text",
+        [texts[1:] + texts[:1]],
+    )
+    live, fresh_dir = tmp_path / "live", tmp_path / "fresh"
+    for d, d_docs in ((live, docs), (fresh_dir, rotated)):
+        d.mkdir()
+        pq.write_table(d_docs, str(d / "documents.parquet"))
+        pq.write_table(emb, str(d / "embeddings.parquet"))
+
+    eng = open_engine(str(live))
+    qvec = [float(x) for x in emb.column("embedding")[0].as_py()]
+    terms = "vector,stream,hash"
+    rag_q = "vector stream merge query"
+
+    def calls(e):
+        return (
+            _rows(e.keyword_search(terms, k=3)),
+            _rows(e.rag_text(rag_q, top_k=5, floor=-1.0)),
+            _rows(e.knn(qvec, k=5)),
+        )
+
+    cold = calls(eng)
+    assert calls(eng) == cold
+    warm_rdds = _persistent_rdds(spark)
+    postings = eng._substrates["postings"][1]
+
+    pq.write_table(rotated, str(live / "documents.parquet"))
+    after = calls(eng)
+    assert after[0] != cold[0]  # the rewrite changes the keyword answer
+    # documents' two substrates were unpersisted and rebuilt; the
+    # vectors (embeddings unchanged) were kept
+    rdds = _persistent_rdds(spark)
+    assert len(warm_rdds - rdds) == 2 and len(rdds - warm_rdds) == 2
+    assert eng._substrates["postings"][1] is not postings
+    # same rows as a fresh Engine over a second copy of the new files (a
+    # different path, so no cached plan can stand in for its scans)
+    assert after == calls(open_engine(str(fresh_dir)))
 
 
 def test_ivf_recall_vs_exact(spark):
@@ -579,10 +785,8 @@ def test_ivf_deterministic_degrades_to_exact_and_is_stable(spark):
     assert {tuple(r) for r in again} == {tuple(r) for r in pruned}
 
 
-def test_engine_corpus_report_and_clusters(spark):
-    from backend_fastapi_spark.api import Engine
-
-    eng = Engine.open(spark, SF_ORACLE)
+def test_engine_corpus_report_and_clusters(open_engine):
+    eng = open_engine(SF_ORACLE)
     rep = eng.corpus_report().collect()
     assert {(r.lang, r.split) for r in rep} >= {("en", "train"), ("en", "test")}
     for r in rep:
@@ -628,10 +832,8 @@ def test_ivf_persisted_partition_pruning(spark, tmp_path):
     }
 
 
-def test_engine_funnel_and_retention(spark):
-    from backend_fastapi_spark.api import Engine
-
-    eng = Engine.open(spark, SF_ORACLE)
+def test_engine_funnel_and_retention(open_engine):
+    eng = open_engine(SF_ORACLE)
     funnel = {r.stage: r.n_users for r in eng.funnel().collect()}
     assert set(funnel) == {"view", "view_click", "view_click_purchase"}
     assert funnel["view"] >= funnel["view_click"] >= funnel["view_click_purchase"]
@@ -639,18 +841,18 @@ def test_engine_funnel_and_retention(spark):
     assert all(r.week_offset >= 0 and r.n_users > 0 for r in ret)
 
 
-def test_engine_knn_sql_matches_dataframe_path(spark):
-    eng = Engine.open(spark, SF_ORACLE)
+def test_engine_knn_sql_matches_dataframe_path(open_engine):
+    eng = open_engine(SF_ORACLE)
     qvec = [float(x) for x in eng.table("embeddings").head()["embedding"]]
     via_sql = [(r.vec_id, r.score_i64) for r in eng.knn_sql(qvec, k=5).collect()]
     via_df = [(r.vec_id, r.score_i64) for r in eng.knn(qvec, k=5).collect()]
     assert via_sql == via_df
 
 
-def test_engine_knn_sql_rejects_non_finite(spark):
+def test_engine_knn_sql_rejects_non_finite(open_engine):
     import pytest as _pytest
 
-    eng = Engine.open(spark, SF_ORACLE)
+    eng = open_engine(SF_ORACLE)
     for bad in [float("nan"), float("inf"), float("-inf")]:
         with _pytest.raises(ValueError, match="finite"):
             eng.knn_sql([1.0, bad, 0.5])
@@ -677,8 +879,8 @@ def test_ivf_deterministic_small_corpus_edges(spark):
     assert ivf_deterministic_topk(emb, empty_q, k=5).count() == 0
 
 
-def test_engine_scrub_and_pii_report(spark):
-    eng = Engine.open(spark, SF_ORACLE)
+def test_engine_scrub_and_pii_report(spark, open_engine):
+    eng = open_engine(SF_ORACLE)
     row = eng.scrub(
         spark.createDataFrame([("reach me: a@b.co",)], ["text"])
     ).head()
@@ -689,8 +891,8 @@ def test_engine_scrub_and_pii_report(spark):
     assert all(r.n_url == 0 and r.n_email == 0 and r.n_phone == 0 for r in rep)
 
 
-def test_engine_clean_pages_and_semantic_dedup(spark):
-    eng = Engine.open(spark, SF_ORACLE)
+def test_engine_clean_pages_and_semantic_dedup(spark, open_engine):
+    eng = open_engine(SF_ORACLE)
     row = eng.clean_pages(
         spark.createDataFrame(
             [("Keep this line fine.\nno mark\nAnother keeper right here.\n"
@@ -705,8 +907,8 @@ def test_engine_clean_pages_and_semantic_dedup(spark):
     assert 0 < a <= b  # the union never loses a SemDeDup pair
 
 
-def test_engine_bucket_table_roundtrip(spark):
-    eng = Engine.open(spark, SF_ORACLE)
+def test_engine_bucket_table_roundtrip(spark, open_engine):
+    eng = open_engine(SF_ORACLE)
     try:
         t = eng.bucket_table(
             eng.table("customer"), "api_b_cust", ["c_custkey"], 4
@@ -1303,3 +1505,30 @@ def test_probed_clusters_distinguishes_empty_from_over_bound(spark):
     # []: zero queries probe nothing (no fallback to the plan's ids)
     assert _probed_clusters(probe, []) == []
     assert _probed_clusters(probe, [(0, 1), (1, 1), (1, 0)]) == [0, 1]
+
+
+def test_ivf_search_query_bound_reaches_join_fallback(spark, tmp_path, monkeypatch):
+    """The centroid probe and the scorer share one query-side bound: past
+    it the probe falls back to the distributed kNN and the scorer to the
+    broadcast-join plan, with the same rows."""
+    from backend_fastapi_spark.operators import ivf as I
+
+    emb = spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet")
+    assigned, centroids = build_ivf(emb, k_clusters=8)
+    path = str(tmp_path / "ivf")
+    I.write_ivf_index(assigned, centroids, path)
+    queries = emb.filter(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_embedding")
+    )
+
+    def search():
+        df = I.ivf_search_persisted(spark, path, queries, k=5, nprobe=3)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return _rows(df), plan
+
+    fast, fast_plan = search()
+    monkeypatch.setattr(I, "MAX_QUERY_ROWS", 2)
+    slow, slow_plan = search()
+    assert "MapInPandas" in fast_plan and "zip_with" not in fast_plan
+    assert "zip_with" in slow_plan  # fixed_dot: the join fallback scorer
+    assert len(fast) == 15 and slow == fast

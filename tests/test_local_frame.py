@@ -10,7 +10,6 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import types as T
 
-from backend_fastapi_spark.api import Engine
 from backend_fastapi_spark.operators.util import local_frame
 from tests.conftest import SF_ORACLE
 
@@ -84,8 +83,8 @@ def test_local_frame_rejects_field_count_mismatch(spark):
         local_frame(spark, [(1, "a", 2)], "id long, s string")
 
 
-def test_engine_plans_from_driver_rows_have_no_python_rdd(spark):
-    eng = Engine.open(spark, SF_ORACLE)
+def test_engine_plans_from_driver_rows_have_no_python_rdd(open_engine):
+    eng = open_engine(SF_ORACLE)
     qvec = [float(x) for x in eng.table("embeddings").head()["embedding"]]
     plans = {
         "knn": eng.knn(qvec, k=5),

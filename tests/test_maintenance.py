@@ -70,10 +70,8 @@ def test_clustered_scan_results_unchanged(spark, tmp_path):
     assert got == want
 
 
-def test_engine_facade_compact_and_cluster(spark, tmp_path):
-    from backend_fastapi_spark.api import Engine
-
-    eng = Engine.open(spark, SF_SMOKE)
+def test_engine_facade_compact_and_cluster(tmp_path, open_engine):
+    eng = open_engine(SF_SMOKE)
     src = str(tmp_path / "frag2")
     eng.table("documents").repartition(16).write.parquet(src)
     rep = eng.compact_table(src, str(tmp_path / "out"),

@@ -364,11 +364,10 @@ def test_mmr_prefers_diverse_over_redundant(spark):
     assert [r["mmr_rank"] for r in got] == [0, 1]
 
 
-def test_engine_retrieval_facade(spark):
-    from backend_fastapi_spark.api import Engine
+def test_engine_retrieval_facade(open_engine):
     from tests.conftest import SF_SMOKE
 
-    eng = Engine.open(spark, SF_SMOKE)
+    eng = open_engine(SF_SMOKE)
 
     kw = eng.keyword_search("vector, hash", k=3).collect()
     assert len(kw) == 6 and {r["term"] for r in kw} == {"vector", "hash"}

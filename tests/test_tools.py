@@ -4,7 +4,6 @@ from __future__ import annotations
 
 import pytest
 
-from backend_fastapi_spark.api import Engine
 from backend_fastapi_spark.tools import execute_tool, parse_tool_call
 from tests.conftest import SF_ORACLE
 
@@ -27,8 +26,8 @@ def test_parse_tool_call_brace_counting():
     assert parse_tool_call("TOOL_CALL: {broken json}") is None
 
 
-def test_dispatch_tools(spark):
-    eng = Engine.open(spark, SF_ORACLE)
+def test_dispatch_tools(open_engine):
+    eng = open_engine(SF_ORACLE)
     out = execute_tool(
         eng, {"tool": "get_recent_orders", "args": {"user_id": 7, "limit": 3}}
     ).collect()
@@ -53,10 +52,10 @@ def test_dispatch_tools(spark):
         execute_tool(eng, {"tool": "rm_rf_slash", "args": {}})
 
 
-def test_end_to_end_tool_loop_shape(spark):
+def test_end_to_end_tool_loop_shape(open_engine):
     """One simulated agent turn: LLM text → parse → dispatch → result rows
     (the ≤5-iteration loop minus the LLM, which stays outside the engine)."""
-    eng = Engine.open(spark, SF_ORACLE)
+    eng = open_engine(SF_ORACLE)
     llm_output = (
         "I need the user's spending.\n"
         'TOOL_CALL: {"tool": "get_spend_summary", "args": {"user_id": 42}}'
@@ -68,12 +67,12 @@ def test_end_to_end_tool_loop_shape(spark):
     assert set(tool_result) == {"n_orders", "total_spend"}
 
 
-def test_reference_tool_surface_parity(spark):
+def test_reference_tool_surface_parity(open_engine):
     """Registry must cover the reference's full 15-tool surface
     (tool_definitions.py:5-241) by exact name."""
     from backend_fastapi_spark.tools import REFERENCE_TOOL_NAMES, build_tool_registry
 
-    eng = Engine.open(spark, SF_ORACLE)
+    eng = open_engine(SF_ORACLE)
     registry = build_tool_registry(eng)
     assert len(REFERENCE_TOOL_NAMES) == 15
     missing = set(REFERENCE_TOOL_NAMES) - set(registry)
@@ -89,10 +88,10 @@ def _turn(eng, store, text):
     return execute_tool(eng, call, store).collect()
 
 
-def test_agent_turns_reference_tools(spark):
+def test_agent_turns_reference_tools(spark, open_engine):
     from backend_fastapi_spark.personal import PersonalStore
 
-    eng = Engine.open(spark, SF_ORACLE)
+    eng = open_engine(SF_ORACLE)
     store = PersonalStore.bootstrap(spark)
 
     rows = _turn(eng, store, 'TOOL_CALL: {"tool": "get_news", "args": {"keyword": "ai", "limit": 3}}')
@@ -138,11 +137,11 @@ def test_agent_turns_reference_tools(spark):
     assert all(r.product == "banana" for r in rows)
 
 
-def test_agent_turns_mutations(spark):
+def test_agent_turns_mutations(spark, open_engine):
     """add/delete tools mutate the threaded PersonalStore (batch-merge CRUD)."""
     from backend_fastapi_spark.personal import PersonalStore
 
-    eng = Engine.open(spark, SF_ORACLE)
+    eng = open_engine(SF_ORACLE)
     store = PersonalStore.bootstrap(spark)
 
     before = len(_turn(eng, store, 'TOOL_CALL: {"tool": "get_diseases", "args": {"user_id": 1}}'))
