@@ -89,7 +89,8 @@ def _listing(path: str) -> tuple:
 class Engine:
     spark: SparkSession
     catalog: Catalog
-    # substrate key -> (file listing it was built from, frame, persisted)
+    # substrate key -> (((table, file listing), ...) it was built from,
+    # frame, persisted)
     _substrates: dict = field(default_factory=dict, repr=False, compare=False)
     # one build per substrate when request threads share the Engine
     # (reentrant: a substrate's build reads table handles)
@@ -99,9 +100,19 @@ class Engine:
 
     @classmethod
     def open(cls, spark: SparkSession, sf_dir: str) -> "Engine":
-        cat = Catalog(spark, sf_dir)
-        cat.register_all()
-        return cls(spark, cat)
+        eng = cls(spark, Catalog(spark, sf_dir))
+        eng._views()
+        return eng
+
+    def _views(self) -> None:
+        """Bind a temp view per table for the SQL surface. Every substrate
+        whose files moved is dropped first: a view is the ``table:``
+        substrate, so it is re-read and re-bound, and no stale cached
+        frame over the same path can stand in for it."""
+        with self._lock:
+            self._evict_stale(list(self._substrates))
+        for name in self.catalog.list_tables():
+            self.table(name)
 
     def close(self) -> None:
         """Unpersist every cached substrate and forget the table handles.
@@ -112,6 +123,21 @@ class Engine:
                     df.unpersist()
             self._substrates.clear()
 
+    def _listed(self, tables) -> tuple:
+        return tuple((t, _listing(self.catalog.path(t))) for t in tables)
+
+    def _evict_stale(self, keys) -> None:
+        """Forget each memoized frame among ``keys`` whose tables' files
+        moved since it was built, unpersisting it first: Spark matches
+        cached plans by their table paths, so a stale cache entry would
+        otherwise be substituted into any later plan over those files."""
+        for key in keys:
+            held = self._substrates.get(key)
+            if held is not None and self._listed(t for t, _ in held[0]) != held[0]:
+                if held[2]:
+                    held[1].unpersist()
+                del self._substrates[key]
+
     def _substrate(
         self,
         key: str,
@@ -120,23 +146,17 @@ class Engine:
         persist: bool = True,
     ) -> DataFrame:
         """The memoized frame ``build()`` for ``key`` while the files of
-        ``tables`` are unchanged. A changed listing unpersists the stale
-        frame BEFORE the rebuild: Spark matches cached plans by their
-        table paths, so a stale cache entry would otherwise be
-        substituted into the rebuilt plan."""
-        listed = tuple(_listing(self.catalog.path(t)) for t in tables)
+        ``tables`` are unchanged."""
         with self._lock:
+            self._evict_stale([key])
             held = self._substrates.get(key)
-            if held is not None:
-                if held[0] == listed:
-                    return held[1]
-                if held[2]:
-                    held[1].unpersist()
-            df = build()
-            if persist:
-                df = df.persist()
-            self._substrates[key] = (listed, df, persist)
-            return df
+            if held is None:
+                listed = self._listed(tables)
+                df = build()
+                if persist:
+                    df = df.persist()
+                held = self._substrates[key] = (listed, df, persist)
+            return held[1]
 
     def _vectors(self) -> DataFrame:
         return self._substrate(
@@ -169,15 +189,16 @@ class Engine:
 
     # -- relational -------------------------------------------------------
     def sql(self, query: str) -> DataFrame:
+        self._views()
         return self.spark.sql(query)
 
     def table(self, name: str) -> DataFrame:
-        return self._substrate(
-            f"table:{name}",
-            (name,),
-            lambda: self.catalog.table(name),
-            persist=False,
-        )
+        def bind() -> DataFrame:
+            df = self.catalog.table(name)
+            df.createOrReplaceTempView(name)
+            return df
+
+        return self._substrate(f"table:{name}", (name,), bind, persist=False)
 
     def user_context(self, recent_n: int = 10) -> DataFrame:
         return user_context(
@@ -208,7 +229,7 @@ class Engine:
                 f"query_vec must be finite; element {bad} is {vals[bad]!r}"
             )
         lit = "array(" + ", ".join(f"cast({x} as double)" for x in vals) + ")"
-        return self.spark.sql(V.knn_sql_statement("embeddings", lit, k=k))
+        return self.sql(V.knn_sql_statement("embeddings", lit, k=k))
 
     def rag(
         self,

@@ -11,7 +11,7 @@ which is what the reference hand-implements with SQL-string assembly.
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -34,11 +34,10 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 @dataclass
 class Catalog:
-    """Maps logical table names to Parquet locations and registers views."""
+    """Maps logical table names to Parquet locations."""
 
     spark: SparkSession
     base_dir: str = DEFAULT_SF_DIR
-    _registered: set = field(default_factory=set)
 
     def path(self, name: str) -> str:
         return os.path.join(self.base_dir, f"{name}.parquet")
@@ -49,13 +48,6 @@ class Catalog:
         from backend_fastapi_spark.sources.parquet import read_table
 
         return read_table(self.spark, self.base_dir, name)
-
-    def register_all(self, names: tuple[str, ...] = TESTDATA_TABLES) -> None:
-        """Create temp views for SQL access (SHOW TABLES analog)."""
-        for name in names:
-            if os.path.exists(self.path(name)):
-                self.table(name).createOrReplaceTempView(name)
-                self._registered.add(name)
 
     def list_tables(self) -> list[str]:
         """S3: catalog listing."""

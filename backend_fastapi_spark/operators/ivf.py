@@ -23,8 +23,23 @@ from pyspark.ml.functions import array_to_vector, vector_to_array
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from backend_fastapi_spark.operators.kernel import (
+    collect_queries,
+    exact_topk,
+    merge_topk,
+    quantize,
+    query_matrix,
+    stack,
+    topk_scorer,
+)
 from backend_fastapi_spark.operators.util import bounded_collect, local_frame
-from backend_fastapi_spark.operators.vector import knn_exact
+from backend_fastapi_spark.operators.vector import (
+    fixed_dot,
+    int_dot,
+    knn_exact,
+    sq8_approx_dot,
+    sq8_codes,
+)
 
 # Fold segments own the ``batch=fold-<seq>`` namespace; the strict match
 # (ADVICE r10) keeps a caller-supplied batch_token that merely CONTAINS
@@ -367,8 +382,6 @@ def ivf_append(
         # inference (review r10); the marker is written/cleared by the
         # index writers, and a layout's SQ8-ness is immutable between
         # rebuilds
-        from backend_fastapi_spark.operators.vector import sq8_codes
-
         new_vectors = new_vectors.join(
             sq8_codes(new_vectors, id_col=id_col, vec_col=vec_col), id_col
         )
@@ -657,12 +670,13 @@ def rebuild_ivf_index(
 # problem size, not local core count. Each collected side is ALSO
 # bounded with limit(N+1) BEFORE materializing (ADVICE r13 medium: a
 # contract-violating oversized queries frame must hit the fallback,
-# never a driver OOM). The queries side is bounded by ``MAX_QUERY_ROWS``,
-# the bound ivf_search_over collects under itself: the probe hands the
-# scorer its collected query matrix, which rides in every task's closure.
+# never a driver OOM). The queries side is collected under
+# ``kernel.MAX_QUERY_ROWS`` (``kernel.collect_queries``), the bound
+# ivf_search_over collects under itself: the probe hands the scorer its
+# collected query matrix, which rides in every task's closure. The
+# (q_id, cluster) probe pairs held on the driver share the pair bound.
 _PROBE_DRIVER_MAX_PAIRS = 4_000_000
 _PROBE_DRIVER_MAX_SIDE = 200_000
-MAX_QUERY_ROWS = 100_000  # ~50 MB at 64 dims — broadcast-sized
 
 
 def _centroid_probe(
@@ -673,75 +687,38 @@ def _centroid_probe(
     query_vec_col: str = "q_embedding",
 ) -> tuple[list, list] | None:
     """Per-query k nearest centroids by exact fixed-point squared-L2 —
-    bit-identical to ``knn_exact(metric='l2', exclude_self=False)``:
-    quantization happens in Spark expressions (the same ``_fx``
-    rounding), the integer arithmetic runs in float64 (every value
-    < 2^53, exact), and the tie-break is (distance asc, cluster asc).
-    Returns ([(q_id, cluster, dist_i64), ...] ranked per query,
-    [(q_id, quantized_query_vec), ...]) — the second element is the
+    bit-identical to ``knn_exact(metric='l2', exclude_self=False)``: the
+    same kernel scorer (``kernel.topk_scorer``) run once on the driver
+    over the collected centroid matrix, tie-break (distance asc, cluster
+    asc). Returns ([(q_id, cluster, dist_i64), ...] ranked per query,
+    the ``kernel.collect_queries`` rows) — the second element is the
     already-collected quantized query side, which the caller hands to
     ``ivf_search_over`` so the re-rank scorer needs no further collect.
     None when either side exceeds its bound / is empty (caller falls
     back to the distributed kNN)."""
     import numpy as np
 
-    from backend_fastapi_spark.operators.vector import _fx
-
     c_rows = bounded_collect(
         centroids.select(
-            F.col("cluster"),
-            F.transform(
-                F.col("centroid"), lambda x: _fx(x).cast("double")
-            ).alias("_cv"),
+            F.col("cluster"), quantize(F.col("centroid")).alias("_cv")
         ),
         _PROBE_DRIVER_MAX_SIDE,
     )
     if len(c_rows) > _PROBE_DRIVER_MAX_SIDE:
         return None
-    q_rows = bounded_collect(
-        queries.select(
-            F.col(query_id).alias("_qid"),
-            F.transform(
-                F.col(query_vec_col), lambda x: _fx(x).cast("double")
-            ).alias("_qv"),
-        ),
-        MAX_QUERY_ROWS,
-    )
-    if len(q_rows) > MAX_QUERY_ROWS:
-        return None
+    q_rows = collect_queries(queries, query_id, query_vec_col)
     if not c_rows or not q_rows:
         return None
     if len(c_rows) * len(q_rows) > _PROBE_DRIVER_MAX_PAIRS:
         return None
     cids = np.asarray([r["cluster"] for r in c_rows])
-    cm = np.stack([np.asarray(r["_cv"], dtype=np.float64) for r in c_rows])
-    qm = np.stack([np.asarray(r["_qv"], dtype=np.float64) for r in q_rows])
-    # Exact-arithmetic envelope (the lsh.py rp_near_dup_pairs guard,
-    # VERDICT r13 #7): every squared-difference term is ≤ (2·max|fx|)²
-    # and a distance sums dim of them — all partial sums must stay
-    # below 2^53 for float64 to be exact, else the "bit-identical to
-    # knn_exact" contract silently breaks on a scale/dim change.
-    maxabs = max(
-        float(np.abs(cm).max(initial=0.0)), float(np.abs(qm).max(initial=0.0))
+    q_ids, qm = query_matrix(q_rows)
+    qs, idx, dist = topk_scorer(q_ids, qm, k, metric="l2")(
+        cids, stack(r["_cv"] for r in c_rows)
     )
-    if cm.shape[1] * (2.0 * maxabs) ** 2 >= 2.0**53:
-        raise ValueError(
-            "_centroid_probe: vectors exceed the exact fixed-point "
-            f"envelope (dim={cm.shape[1]}, max|fx|={maxabs:.3g}, "
-            "dim*(2*max)^2 >= 2^53) — the float64 distance would round; "
-            "normalize the vectors or reduce dim"
-        )
-    d = (
-        (cm * cm).sum(axis=1)[:, None]
-        + (qm * qm).sum(axis=1)[None, :]
-        - 2.0 * (cm @ qm.T)
-    )
-    out = []
-    for j, r in enumerate(q_rows):
-        col = d[:, j]
-        perm = np.lexsort((cids, col))[:k]
-        out.extend((r["_qid"], int(cids[p]), int(col[p])) for p in perm)
-    return out, [(r["_qid"], r["_qv"]) for r in q_rows]
+    return [
+        (q, int(cids[i]), int(d)) for q, i, d in zip(qs, idx, dist)
+    ], q_rows
 
 
 def _probe_frames(
@@ -774,8 +751,6 @@ def ivf_search_persisted(
     then scan ONLY those cluster partitions. The isin() filter on the
     partition column reaches the file index as a PartitionFilter — pruned
     before any IO."""
-    from backend_fastapi_spark.operators.vector import knn_exact
-
     centroids = spark.read.parquet(f"{path}/centroids")
     res = _centroid_probe(centroids, queries, nprobe)
     if res is not None:
@@ -796,7 +771,7 @@ def ivf_search_persisted(
         # and derive the distinct probed ids in Python — the previous
         # form ran the probe plan once for the distinct-collect and
         # AGAIN embedded in the search plan.
-        probe_rows, q_quant = _collect_probe_pairs(probe)
+        probe_rows, q_quant = _collect_probe_pairs(probe), None
         probed = _probed_clusters(probe, probe_rows)
     lists = read_ivf_lists(spark, path).filter(F.col("cluster").isin(probed))
     return ivf_search_over(
@@ -805,14 +780,15 @@ def ivf_search_persisted(
     )
 
 
-def _collect_probe_pairs(probe: DataFrame, bound: int = 4_000_000):
-    """Bounded collect of a (q_id, cluster) probe frame →
-    (probe_rows, None); (None, None) when over the bound (the
-    ivf_search_over fallback plan then handles it)."""
-    rows = bounded_collect(probe.select("q_id", "cluster"), bound)
-    if len(rows) > bound:
-        return None, None
-    return [(r["q_id"], r["cluster"]) for r in rows], None
+def _collect_probe_pairs(probe: DataFrame) -> list | None:
+    """The (q_id, cluster) pairs of a probe frame, or None when there
+    are more than ``_PROBE_DRIVER_MAX_PAIRS`` (the ivf_search_over
+    fallback plan then handles it). A probe may be a computed frame — the
+    distributed kNN's window output — so this is a plain bounded
+    ``limit().collect()``, never ``bounded_collect``'s single task."""
+    bound = _PROBE_DRIVER_MAX_PAIRS
+    rows = probe.select("q_id", "cluster").limit(bound + 1).collect()
+    return None if len(rows) > bound else [(r["q_id"], r["cluster"]) for r in rows]
 
 
 def _probed_clusters(probe: DataFrame, probe_rows: list | None) -> list[int]:
@@ -848,8 +824,6 @@ def ivf_search_persisted_adaptive(
     cluster partition column prunes before any IO, then one pruned
     re-rank."""
     from pyspark.sql import Window
-
-    from backend_fastapi_spark.operators.vector import knn_exact
 
     if alpha_num < alpha_den:
         raise ValueError(
@@ -891,7 +865,7 @@ def ivf_search_persisted_adaptive(
             )
             .select("q_id", "cluster")
         )
-        probe_rows, q_quant = _collect_probe_pairs(probe)
+        probe_rows, q_quant = _collect_probe_pairs(probe), None
         probed = _probed_clusters(probe, probe_rows)
     lists = read_ivf_lists(spark, path).filter(F.col("cluster").isin(probed))
     return ivf_search_over(
@@ -911,76 +885,32 @@ def ivf_search_over(
 ) -> DataFrame:
     """Score pre-pruned inverted lists against their probing queries.
 
-    The scorer is a per-Arrow-batch float64 matmul (the knn_exact
-    machinery): corpus vectors are quantized IN SPARK (``_fx`` — the
-    same rounding as every other scorer) and each batch multiplies its
-    per-cluster slices against the probing queries' matrix, emitting
-    only its per-batch top-k per query. Exact: every quantized value is
-    ≤ ~1e6, products ≤ ~1e12, and a 64-dim dot sums 64 such integer
-    terms — all partial sums < 2^53, which float64 represents exactly
-    (guarded loudly per batch), so scores are the identical int64s the
-    previous interpreted per-row ``fixed_dot`` aggregate produced at
-    ~100x the per-row cost (VERDICT r13 #3).
+    The scorer is ``kernel.exact_topk`` with a cluster → probing-queries
+    map: corpus vectors are quantized IN SPARK and each Arrow batch
+    multiplies its per-cluster slices against the probing queries'
+    matrix, emitting only its per-batch top-k per query. Exact inside
+    the kernel's 2^53 envelope (checked per batch, raising outside it),
+    so scores are the identical int64s the interpreted per-row
+    ``fixed_dot`` aggregate produces at ~100x the per-row cost (VERDICT
+    r13 #3).
 
-    ``probe_rows`` ([(q_id, cluster), ...]) and ``q_quant``
-    ([(q_id, quantized_vec), ...]) let callers that already hold the
+    ``probe_rows`` ([(q_id, cluster), ...]) and ``q_quant`` (the
+    ``kernel.collect_queries`` rows) let callers that already hold the
     probe decision locally (every ``_centroid_probe`` fast path) skip
-    the collects entirely; otherwise both sides are collected BOUNDED
-    (limit(N+1) — the knn_exact query-side contract), falling back to
-    the broadcast-join + interpreted-dot plan when a pathological probe
-    exceeds the bound. ``q_quant`` holds at most ``MAX_QUERY_ROWS`` rows
-    (``_centroid_probe`` collects under the same bound). The matmul path
-    scores each distinct (q_id, cluster) probe pair once."""
+    the collects entirely; otherwise both sides are collected BOUNDED,
+    falling back to the broadcast-join + interpreted-dot plan when a
+    pathological probe exceeds the bound. The matmul path scores each
+    distinct (q_id, cluster) probe pair once."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql import Window
 
-    from backend_fastapi_spark.operators.vector import _fx
-
-    MAX_PROBE_ROWS = 4_000_000
     if q_quant is None:
-        collected = bounded_collect(
-            queries.select(
-                F.col("q_id").alias("_qid"),
-                F.transform(
-                    F.col("q_embedding"), lambda x: _fx(x).cast("double")
-                ).alias("_qv"),
-            ),
-            MAX_QUERY_ROWS,
-        )
-        q_quant = (
-            None
-            if len(collected) > MAX_QUERY_ROWS
-            else [(r["_qid"], r["_qv"]) for r in collected]
-        )
+        q_quant = collect_queries(queries)
     if q_quant is not None and probe_rows is None:
-        collected = bounded_collect(
-            probe.select("q_id", "cluster"), MAX_PROBE_ROWS
-        )
-        probe_rows = (
-            None
-            if len(collected) > MAX_PROBE_ROWS
-            else [(r["q_id"], r["cluster"]) for r in collected]
-        )
+        probe_rows = _collect_probe_pairs(probe)
     if q_quant is None or probe_rows is None:
         # Oversized probe/query side: keep the join + interpreted-dot
         # plan — it never holds either side on the driver.
-        from backend_fastapi_spark.operators.vector import fixed_dot
-
-        pruned = pruned_lists.join(
-            F.broadcast(probe.join(queries, "q_id")), "cluster"
-        )
-        scored = pruned.withColumn(
-            "score_i64", fixed_dot(F.col("embedding"), F.col("q_embedding"))
-        )
-        w = Window.partitionBy("q_id").orderBy(
-            F.col("score_i64").desc(), F.col(corpus_id).asc()
-        )
-        return (
-            scored.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= k)
-            .select("q_id", corpus_id, "cluster", "score_i64")
-        )
+        return _join_scored(pruned_lists, probe, queries, k, corpus_id)
 
     qid_type = queries.schema["q_id"].dataType.simpleString()
     if not q_quant or not probe_rows:
@@ -992,15 +922,12 @@ def ivf_search_over(
             F.lit(0).cast("long").alias("score_i64"),
         ).filter(F.lit(False))
 
-    q_ids = [q for q, _ in q_quant]
-    qm = np.stack([np.asarray(v, dtype=np.float64) for _, v in q_quant])
+    q_ids, qm = query_matrix(q_quant)
     q_index = {q: j for j, q in enumerate(q_ids)}
-    qmax = float(np.abs(qm).max(initial=0.0))
-    dim = qm.shape[1]
     # cluster -> sorted array of probing-query row indices. Built from
     # the DISTINCT (q_id, cluster) probe rows on purpose: a duplicated
     # probe row scores its cluster once, so one vector can never fill two
-    # of a query's top-k slots (the join fallback below would score it
+    # of a query's top-k slots (the join fallback above would score it
     # twice; no caller produces duplicate probe rows)
     c2q: dict = {}
     for q, c in set(probe_rows):
@@ -1008,78 +935,15 @@ def ivf_search_over(
     c2q = {c: np.asarray(sorted(js)) for c, js in c2q.items()}
 
     slim = pruned_lists.select(
-        F.col("cluster"),
+        F.col("cluster").alias("_grp"),
         F.col(corpus_id).alias("_cid"),
-        F.transform(F.col("embedding"), lambda x: _fx(x).cast("double")).alias(
-            "_cv"
-        ),
+        quantize(F.col("embedding")).alias("_cv"),
     )
-    cid_type = pruned_lists.schema[corpus_id].dataType.simpleString()
-    cluster_type = pruned_lists.schema["cluster"].dataType.simpleString()
-    out_schema = (
-        f"q_id {qid_type}, _cid {cid_type}, cluster {cluster_type}, "
-        "score_i64 long"
-    )
-
-    def score_batches(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            m = np.stack(pdf["_cv"].to_numpy()).astype(np.float64)
-            cmax = float(np.abs(m).max(initial=0.0))
-            if dim * cmax * qmax >= 2.0**53:
-                raise ValueError(
-                    "ivf_search_over: vectors exceed the exact "
-                    f"fixed-point envelope (dim={dim}, max|fx| corpus="
-                    f"{cmax:.3g} query={qmax:.3g}) — the float64 dot "
-                    "would round; normalize the vectors or reduce dim"
-                )
-            ids = pdf["_cid"].to_numpy()
-            cl = pdf["cluster"].to_numpy()
-            # per-query candidate accumulators across this batch's groups
-            acc: dict = {}
-            # group rows by cluster (contiguous runs NOT guaranteed —
-            # delta segments may interleave — so index by value)
-            order = np.argsort(cl, kind="stable")
-            cl_s = cl[order]
-            brk = np.nonzero(cl_s[1:] != cl_s[:-1])[0] + 1
-            for idx in np.split(order, brk):
-                js = c2q.get(cl[idx[0]])
-                if js is None or js.size == 0:
-                    continue
-                g = m[idx] @ qm[js].T  # (n_c, m_c) exact float64
-                for col, j in enumerate(js):
-                    a = acc.setdefault(j, [])
-                    a.append((ids[idx], cl[idx], g[:, col]))
-            rows_q, rows_c, rows_cl, rows_s = [], [], [], []
-            for j, parts in acc.items():
-                aid = np.concatenate([p[0] for p in parts])
-                acl = np.concatenate([p[1] for p in parts])
-                asc = np.concatenate([p[2] for p in parts])
-                # batch-local top-k in the global order (score DESC,
-                # id ASC) — a superset of the global winners
-                perm = np.lexsort((aid, -asc))[:k]
-                rows_q.extend([q_ids[j]] * perm.size)
-                rows_c.extend(aid[perm])
-                rows_cl.extend(acl[perm])
-                rows_s.extend(asc[perm].astype(np.int64))
-            yield pd.DataFrame(
-                {
-                    "q_id": rows_q,
-                    "_cid": rows_c,
-                    "cluster": rows_cl,
-                    "score_i64": rows_s,
-                }
-            )
-
-    cands = slim.mapInPandas(score_batches, schema=out_schema)
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("score_i64").desc(), F.col("_cid").asc()
-    )
-    return (
-        cands.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select("q_id", F.col("_cid").alias(corpus_id), "cluster", "score_i64")
+    return exact_topk(slim, q_ids, qm, k, qid_type, c2q=c2q).select(
+        F.col("_qid").alias("q_id"),
+        F.col("_cid").alias(corpus_id),
+        F.col("_grp").alias("cluster"),
+        "score_i64",
     )
 
 
@@ -1099,14 +963,6 @@ def ivf_search_over(
 # iterated, so the PLAN SHAPE being certified is exactly production IVF's:
 # argmin-assign → nprobe probe → re-rank only probed lists.
 # ---------------------------------------------------------------------------
-
-
-def _quantize(col):
-    from backend_fastapi_spark.operators.vector import FIXED_SCALE
-
-    return F.transform(
-        col, lambda x: F.round(x.cast("double") * FIXED_SCALE).cast("long")
-    )
 
 
 def _l2_i64_lit(qv, cv: list[int]):
@@ -1138,7 +994,7 @@ def deterministic_medoids(
     rows = (
         df.select(
             F.col(id_col).alias("_id"),
-            _quantize(F.col(vec_col)).alias("_qv"),
+            quantize(F.col(vec_col)).alias("_qv"),
             F.md5(F.col(id_col).cast("string")).alias("_h"),
         )
         .orderBy("_h", "_id")
@@ -1177,7 +1033,7 @@ def trained_centroids(
 
     feats = df.select(
         array_to_vector(
-            F.transform(_quantize(F.col(vec_col)), lambda x: x.cast("double"))
+            F.transform(quantize(F.col(vec_col)), lambda x: x.cast("double"))
         ).alias("_f")
     )
     model = KMeans(
@@ -1259,7 +1115,7 @@ def _medoid_probe(queries: DataFrame, med, nprobe: int) -> DataFrame:
 
     return (
         queries.select(
-            F.col("q_id"), _quantize(F.col("q_embedding")).alias("_pq")
+            F.col("q_id"), quantize(F.col("q_embedding")).alias("_pq")
         )
         .select(
             "q_id",
@@ -1327,7 +1183,7 @@ def _medoid_probe_adaptive(
     )
     return (
         queries.select(
-            F.col("q_id"), _quantize(F.col("q_embedding")).alias("_pq")
+            F.col("q_id"), quantize(F.col("q_embedding")).alias("_pq")
         )
         .select("q_id", "_pq", F.explode(kept).alias("_probe"))
         .select("q_id", "_pq", F.col("_probe")["cluster"].alias("cluster"))
@@ -1347,10 +1203,8 @@ def _rerank_over_probe(
     top-k with total tie-break — the body ivf_deterministic_topk and
     ivf_adaptive_topk have in common (the probe DEFINITION is the only
     difference between them)."""
-    from pyspark.sql import Window
-
     base = df.select(
-        F.col(id_col), _quantize(F.col(vec_col)).alias("_qv")
+        F.col(id_col), quantize(F.col(vec_col)).alias("_qv")
     )
     assigned = _assign_arrow(base, med, id_col)
     cand = assigned.join(F.broadcast(probe), "cluster").filter(
@@ -1360,19 +1214,10 @@ def _rerank_over_probe(
         "q_id",
         id_col,
         "cluster",
-        F.aggregate(
-            F.zip_with("_qv", "_pq", lambda x, y: x * y),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        ).alias("score_i64"),
+        int_dot(F.col("_qv"), F.col("_pq")).alias("score_i64"),
     )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("score_i64").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select("q_id", id_col, "cluster", "score_i64")
+    return merge_topk(scored, "q_id", id_col, k).select(
+        "q_id", id_col, "cluster", "score_i64"
     )
 
 
@@ -1460,9 +1305,6 @@ def ivf_search(
 ) -> DataFrame:
     """Bucket-pruned exact search: per query, pick nprobe nearest centroids
     (broadcast, tiny), then score only vectors in the probed clusters."""
-    from pyspark.sql import Window
-    from backend_fastapi_spark.operators.vector import fixed_dot
-
     probe = knn_exact(
         centroids.withColumnRenamed("centroid", "embedding"),
         queries,
@@ -1471,21 +1313,20 @@ def ivf_search(
         metric="l2",
         exclude_self=False,
     ).select("q_id", "cluster")
-    # (cluster, q_id) pairs broadcast against the corpus: only probed
-    # clusters survive the join, each tagged with the probing query
-    pruned = assigned.join(
+    return _join_scored(assigned, probe, queries, k, corpus_id)
+
+
+def _join_scored(lists, probe, queries, k, corpus_id) -> DataFrame:
+    """Top-k of the probed lists by the interpreted ``fixed_dot``: the
+    (q_id, cluster) probe pairs broadcast against the lists, so only
+    probed clusters survive the join, each tagged with its query."""
+    scored = lists.join(
         F.broadcast(probe.join(queries, "q_id")), "cluster"
-    )
-    scored = pruned.withColumn(
+    ).withColumn(
         "score_i64", fixed_dot(F.col("embedding"), F.col("q_embedding"))
     )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("score_i64").desc(), F.col(corpus_id).asc()
-    )
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select("q_id", corpus_id, "cluster", "score_i64")
+    return merge_topk(scored, "q_id", corpus_id, k).select(
+        "q_id", corpus_id, "cluster", "score_i64"
     )
 
 
@@ -1522,18 +1363,10 @@ def ivf_sq8_topk(
     COLUMNS of the partitioned inverted lists (write_ivf_index over
     sq8_codes output joined to the assignment), making the candidate
     scan a narrow projection of the probed partitions with no join."""
-    from pyspark.sql import Window
-
-    from backend_fastapi_spark.operators.vector import (
-        fixed_dot,
-        sq8_approx_dot,
-        sq8_codes,
-    )
-
     if med is None:
         med = deterministic_medoids(df, k_clusters, id_col, vec_col)
 
-    base = df.select(F.col(id_col), _quantize(F.col(vec_col)).alias("_qv"))
+    base = df.select(F.col(id_col), quantize(F.col(vec_col)).alias("_qv"))
     assigned = _assign_arrow(base, med, id_col).drop("_qv")
     probe = _medoid_probe(queries, med, nprobe).select("q_id", "cluster")
 
@@ -1560,14 +1393,7 @@ def ivf_sq8_topk(
             ).alias("approx_i64"),
         )
     )
-    w1 = Window.partitionBy("q_id").orderBy(
-        F.col("approx_i64").desc(), F.col(id_col).asc()
-    )
-    short = (
-        approx.withColumn("_rn", F.row_number().over(w1))
-        .filter(F.col("_rn") <= rerank * k)
-        .drop("_rn")
-    )
+    short = merge_topk(approx, "q_id", id_col, rerank * k, score="approx_i64")
     rer = (
         short.join(df.select(F.col(id_col), vec_col), id_col)
         .join(
@@ -1580,13 +1406,8 @@ def ivf_sq8_topk(
             "score_i64", fixed_dot(F.col(vec_col), F.col("q_embedding"))
         )
     )
-    w2 = Window.partitionBy("q_id").orderBy(
-        F.col("score_i64").desc(), F.col(id_col).asc()
-    )
-    return (
-        rer.withColumn("_rn", F.row_number().over(w2))
-        .filter(F.col("_rn") <= k)
-        .select("q_id", id_col, "cluster", "approx_i64", "score_i64")
+    return merge_topk(rer, "q_id", id_col, k).select(
+        "q_id", id_col, "cluster", "approx_i64", "score_i64"
     )
 
 
@@ -1610,8 +1431,6 @@ def write_ivf_sq8_index(
     it with one FS call instead of a per-micro-batch parquet schema
     inference (review r10); a plain write_ivf_index rebuild at the same
     path removes the marker."""
-    from backend_fastapi_spark.operators.vector import sq8_codes
-
     codes = sq8_codes(assigned, id_col=id_col, vec_col=vec_col)
     write_ivf_index(assigned.join(codes, id_col), centroids, path, mode=mode)
     spark = assigned.sparkSession
@@ -1638,15 +1457,6 @@ def ivf_sq8_search_persisted(
     asserted in tests). Only the rerank·k shortlist per query reads
     full-precision vectors. Returns (q_id, <corpus_id>, cluster,
     approx_i64, score_i64) ranked best-first per query."""
-    from pyspark.sql import Window
-
-    from backend_fastapi_spark.operators.vector import (
-        fixed_dot,
-        knn_exact,
-        sq8_approx_dot,
-        sq8_codes,
-    )
-
     centroids = spark.read.parquet(f"{path}/centroids")
     res = _centroid_probe(centroids, queries, nprobe)
     if res is not None:
@@ -1687,14 +1497,7 @@ def ivf_sq8_search_persisted(
             ).alias("approx_i64"),
         )
     )
-    w1 = Window.partitionBy("q_id").orderBy(
-        F.col("approx_i64").desc(), F.col(corpus_id).asc()
-    )
-    short = (
-        cand.withColumn("_rn", F.row_number().over(w1))
-        .filter(F.col("_rn") <= rerank * k)
-        .drop("_rn")
-    )
+    short = merge_topk(cand, "q_id", corpus_id, rerank * k, score="approx_i64")
     rer = (
         short.join(
             lists.select(corpus_id, vec_col), corpus_id
@@ -1704,11 +1507,6 @@ def ivf_sq8_search_persisted(
             "score_i64", fixed_dot(F.col(vec_col), F.col("q_embedding"))
         )
     )
-    w2 = Window.partitionBy("q_id").orderBy(
-        F.col("score_i64").desc(), F.col(corpus_id).asc()
-    )
-    return (
-        rer.withColumn("_rn", F.row_number().over(w2))
-        .filter(F.col("_rn") <= k)
-        .select("q_id", corpus_id, "cluster", "approx_i64", "score_i64")
+    return merge_topk(rer, "q_id", corpus_id, k).select(
+        "q_id", corpus_id, "cluster", "approx_i64", "score_i64"
     )

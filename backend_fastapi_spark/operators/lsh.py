@@ -89,7 +89,13 @@ def ann_similarity_join(
 
 import hashlib as _hashlib
 
-from backend_fastapi_spark.operators.vector import FIXED_SCALE, int_dot
+from backend_fastapi_spark.operators.kernel import (
+    gram_pairs,
+    merge_topk,
+    quantize,
+    stack,
+)
+from backend_fastapi_spark.operators.vector import int_dot
 
 
 def rp_size_for(n_vectors: int, target_bucket: int = 64,
@@ -125,15 +131,6 @@ def rp_planes(dim: int, n_tables: int, n_planes: int) -> list[list[list[int]]]:
         ]
         for t in range(n_tables)
     ]
-
-
-def _quantize(vec_col: str):
-    """Fixed-point int64 quantization — the shared substrate of every
-    deterministic vector operator (same rule as vector._fx)."""
-    return F.transform(
-        F.col(vec_col),
-        lambda x: F.round(x.cast("double") * FIXED_SCALE).cast("long"),
-    )
 
 
 def _rp_signatures(base: DataFrame, H, n_tables: int, n_planes: int) -> DataFrame:
@@ -190,7 +187,7 @@ def _rp_query_probes(
                     buckets.append(
                         base ^ (1 << order[:, :, j]).astype(np.int64)
                     )
-            stack = np.stack(buckets, axis=2)  # (n, tables, n_probe)
+            stacked = np.stack(buckets, axis=2)  # (n, tables, n_probe)
             yield pd.DataFrame(
                 {
                     "_id": pdf["_id"].to_numpy().repeat(n_tables * n_probe),
@@ -198,7 +195,7 @@ def _rp_query_probes(
                         np.arange(n_tables, dtype=np.int32).repeat(n_probe),
                         len(Q),
                     ),
-                    "bucket": stack.reshape(-1),
+                    "bucket": stacked.reshape(-1),
                 }
             )
 
@@ -248,8 +245,6 @@ def rp_topk(
     and asserted on planted twins in tests."""
     import numpy as np
 
-    from pyspark.sql import Window
-
     from backend_fastapi_spark.operators.util import materialize
 
     planes = rp_planes(dim, n_tables, n_planes)
@@ -258,10 +253,12 @@ def rp_topk(
         dtype=np.int64,
     )
     corpus = materialize(
-        df.select(F.col(id_col).alias("_id"), _quantize(vec_col).alias("_q"))
+        df.select(
+            F.col(id_col).alias("_id"), quantize(F.col(vec_col)).alias("_q")
+        )
     )
     qbase = queries.select(
-        F.col(q_id_col).alias("_id"), _quantize(q_vec_col).alias("_q")
+        F.col(q_id_col).alias("_id"), quantize(F.col(q_vec_col)).alias("_q")
     )
     corpus_sig = _rp_signatures(corpus, H, n_tables, n_planes)
     # The query side is a handful of rows — its signature frame
@@ -290,14 +287,7 @@ def rp_topk(
             int_dot(F.col("_q"), F.col("_qq")).alias("score_i64"),
         )
     )
-    w = Window.partitionBy(q_id_col).orderBy(
-        F.col("score_i64").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-    )
+    return merge_topk(scored, q_id_col, id_col, k)
 
 
 def rp_near_dup_pairs(
@@ -331,7 +321,7 @@ def rp_near_dup_pairs(
     per-element dot. Scoring inside the bucket attaches arrays to the
     1.2 M SIGNATURE rows instead (~0.7 GB), runs the exact dots as
     dense float64 BLAS (integer-exact: products ≤ 4e12, 64-term sums ≤
-    2.6e14 ≪ 2^53 — the ``near_dup_pairs_matmul`` envelope, guarded
+    2.6e14 ≪ 2^53 — ``kernel.gram_pairs``, which checks the envelope
     loudly per group), and shuffles only the ≤ n_tables copies of the
     TRUE pairs to the final distinct. An SQ8-code prescreen of the pair
     join was also measured and REJECTED: at sf10 the lossless
@@ -352,7 +342,9 @@ def rp_near_dup_pairs(
     # and the signature-row array attach) — lineage recomputation would
     # scan+quantize the raw vectors once per read.
     base = materialize(
-        df.select(F.col(id_col).alias("_id"), _quantize(vec_col).alias("_q"))
+        df.select(
+            F.col(id_col).alias("_id"), quantize(F.col(vec_col)).alias("_q")
+        )
     )
 
     # All n_tables·n_planes hyperplane dots per row as one int64 matmul
@@ -368,38 +360,14 @@ def rp_near_dup_pairs(
     grouped = keyed.join(base, "_id").select("t", "bucket", "_id", "_q")
 
     id_ddl = base.schema["_id"].dataType.simpleString()
-    thr = float(threshold_i64)
 
     def score_group(ids: "np.ndarray", m: "np.ndarray", sink: list) -> None:
         """Exact Gram verify of ONE (table, bucket) group — appends
         (id_a, id_b, score) arrays for above-threshold i<j pairs."""
-        n = len(ids)
-        if n < 2:
-            return
-        maxabs = float(np.abs(m).max(initial=0.0))
-        if m.shape[1] * maxabs * maxabs >= 2.0**53:
-            raise ValueError(
-                "rp_near_dup_pairs: embeddings exceed the exact "
-                f"fixed-point envelope (dim={m.shape[1]}, "
-                f"max|fx|={maxabs:.3g}, dim*max^2 >= 2^53) — the float64 "
-                "Gram matmul would round; normalize the vectors or "
-                "reduce dim"
-            )
-        # id-ascending order so emitted pairs are (smaller, larger)
-        order = np.argsort(ids, kind="stable")
-        ids, m = ids[order], m[order]
-        # strip the Gram product so one skewed mega-bucket (every vector
-        # hashing together) stays bounded at ~160 MB of float64 per strip
-        strip = max(1, min(4096, 20_000_000 // n))
-        for i0 in range(0, n - 1, strip):
-            i1 = min(i0 + strip, n)
-            g = m[i0:i1] @ m.T  # (strip, n) — integer-exact float64
-            # upper triangle only (global j > global i), fully vectorized
-            ri, cj = np.nonzero(g >= thr)
-            keep = cj > ri + i0
-            ri, cj = ri[keep], cj[keep]
-            if ri.size:
-                sink.append((ids[ri + i0], ids[cj], g[ri, cj].astype(np.int64)))
+        if len(ids) >= 2:
+            ia, ib, s = gram_pairs(threshold_i64, ids, m)
+            if ia.size:
+                sink.append((ia, ib, s))
 
     def score_batches(pdfs):
         """mapInPandas over (t, bucket)-clustered rows: per-group work is
@@ -427,11 +395,7 @@ def rp_near_dup_pairs(
                 carry, ignore_index=True
             )
             carry.clear()
-            score_group(
-                pdf["_id"].to_numpy(),
-                np.stack(pdf["_q"].to_numpy()).astype(np.float64),
-                sink,
-            )
+            score_group(pdf["_id"].to_numpy(), stack(pdf["_q"]), sink)
 
         def flush(pdf: pd.DataFrame) -> None:
             # group boundaries where (t, bucket) changes
@@ -441,7 +405,7 @@ def rp_near_dup_pairs(
             starts = np.concatenate(([0], brk))
             ends = np.concatenate((brk, [len(pdf)]))
             ids = pdf["_id"].to_numpy()
-            m = np.stack(pdf["_q"].to_numpy()).astype(np.float64)
+            m = stack(pdf["_q"])
             for s, e in zip(starts, ends):
                 score_group(ids[s:e], m[s:e], sink)
 

@@ -18,7 +18,7 @@ Spark-first shape:
   (one corpus scan, zero shuffle).
 - **search**: distance tables are built driver-side from the (guarded,
   |Q|-row) collected query vectors — same discipline as
-  vector.knn_exact's query-side collect — and closed over by a
+  ``kernel.collect_queries`` — and closed over by a
   mapInPandas scorer: per batch, adc_d2 = Σ_s dt[s][code_s], a pure
   numpy gather. The ONLY shuffle in the whole search is the final
   per-query top-k window over the ADC-pruned candidate set.
@@ -34,11 +34,12 @@ codes, ADC sums, and both rankings bit-for-bit — a hash-checkable PQ.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from backend_fastapi_spark.operators.ivf import deterministic_medoids, _quantize
-from backend_fastapi_spark.operators.vector import FIXED_SCALE
+from backend_fastapi_spark.operators.ivf import deterministic_medoids
+from backend_fastapi_spark.operators.kernel import FIXED_SCALE, merge_topk, quantize
+from backend_fastapi_spark.operators.vector import int_dot
 
 M_SUB = 8  # subspaces
 SUB_DIM = 8  # dims per subspace (64-dim vectors)
@@ -105,7 +106,7 @@ def pq_codebooks_trained(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    base = df.select(_quantize(F.col(vec_col)).alias("_qv"))
+    base = df.select(quantize(F.col(vec_col)).alias("_qv"))
     sub = base.select(
         *[
             array_to_vector(
@@ -154,7 +155,7 @@ def pq_encode(
         [df.schema[id_col]]
         + [T.StructField(f"code{s}", T.IntegerType(), False) for s in range(M_SUB)]
     )
-    base = df.select(F.col(id_col), _quantize(F.col(vec_col)).alias("_qv"))
+    base = df.select(F.col(id_col), quantize(F.col(vec_col)).alias("_qv"))
 
     def encode(batches):
         for pdf in batches:
@@ -203,7 +204,7 @@ def pq_adc_topk(
 
     q_rows = (
         queries.select(
-            F.col("q_id"), _quantize(F.col("q_embedding")).alias("_pq")
+            F.col("q_id"), quantize(F.col("q_embedding")).alias("_pq")
         )
         .limit(max_queries + 1)
         .collect()
@@ -256,22 +257,17 @@ def pq_adc_topk(
     scored = enc.mapInPandas(score, schema=out_schema).filter(
         F.col(id_col) != F.col("q_id")
     )
-    w_adc = Window.partitionBy("q_id").orderBy(
-        F.col("adc_d2").asc(), F.col(id_col).asc()
-    )
-    cands = (
-        scored.withColumn("_rn", F.row_number().over(w_adc))
-        .filter(F.col("_rn") <= rerank)
-        .drop("_rn")
+    cands = merge_topk(
+        scored, "q_id", id_col, rerank, score="adc_d2", desc=False
     )
 
     # exact re-rank: candidates are |Q|·rerank rows — broadcast them into
     # the corpus scan, compute the full-width int64 dot only there.
     corpus_q = df.select(
-        F.col(id_col), _quantize(F.col(vec_col)).alias("_cv")
+        F.col(id_col), quantize(F.col(vec_col)).alias("_cv")
     )
     q_lit = queries.select(
-        F.col("q_id"), _quantize(F.col("q_embedding")).alias("_pq")
+        F.col("q_id"), quantize(F.col("q_embedding")).alias("_pq")
     )
     reranked = (
         corpus_q.join(F.broadcast(cands), id_col)
@@ -280,20 +276,11 @@ def pq_adc_topk(
             "q_id",
             id_col,
             "adc_d2",
-            F.aggregate(
-                F.zip_with("_cv", "_pq", lambda x, y: x * y),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            ).alias("score_i64"),
+            int_dot(F.col("_cv"), F.col("_pq")).alias("score_i64"),
         )
     )
-    w_final = Window.partitionBy("q_id").orderBy(
-        F.col("score_i64").desc(), F.col(id_col).asc()
-    )
-    return (
-        reranked.withColumn("_rn", F.row_number().over(w_final))
-        .filter(F.col("_rn") <= k)
-        .select("q_id", id_col, "adc_d2", "score_i64")
+    return merge_topk(reranked, "q_id", id_col, k).select(
+        "q_id", id_col, "adc_d2", "score_i64"
     )
 
 
@@ -343,7 +330,7 @@ def ivfpq_topk(
 
     q_rows = (
         queries.select(
-            F.col("q_id"), _quantize(F.col("q_embedding")).alias("_pq")
+            F.col("q_id"), quantize(F.col("q_embedding")).alias("_pq")
         )
         .limit(max_queries + 1)
         .collect()
@@ -366,7 +353,7 @@ def ivfpq_topk(
         + cb_sq[None, :, :]
     )
 
-    base = df.select(F.col(id_col), _quantize(F.col(vec_col)).alias("_qv"))
+    base = df.select(F.col(id_col), quantize(F.col(vec_col)).alias("_qv"))
     id_field = base.schema[id_col]
     out_schema = T.StructType(
         [
@@ -409,17 +396,12 @@ def ivfpq_topk(
                 )
 
     scored = base.mapInPandas(score, schema=out_schema)
-    w_adc = Window.partitionBy("q_id").orderBy(
-        F.col("adc_d2").asc(), F.col(id_col).asc()
+    cands = merge_topk(
+        scored, "q_id", id_col, rerank, score="adc_d2", desc=False
     )
-    cands = (
-        scored.withColumn("_rn", F.row_number().over(w_adc))
-        .filter(F.col("_rn") <= rerank)
-        .drop("_rn")
-    )
-    corpus_q = df.select(F.col(id_col), _quantize(F.col(vec_col)).alias("_cv"))
+    corpus_q = df.select(F.col(id_col), quantize(F.col(vec_col)).alias("_cv"))
     q_lit = queries.select(
-        F.col("q_id"), _quantize(F.col("q_embedding")).alias("_pq")
+        F.col("q_id"), quantize(F.col("q_embedding")).alias("_pq")
     )
     reranked = (
         corpus_q.join(F.broadcast(cands), id_col)
@@ -429,20 +411,11 @@ def ivfpq_topk(
             id_col,
             "cluster",
             "adc_d2",
-            F.aggregate(
-                F.zip_with("_cv", "_pq", lambda x, y: x * y),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            ).alias("score_i64"),
+            int_dot(F.col("_cv"), F.col("_pq")).alias("score_i64"),
         )
     )
-    w_final = Window.partitionBy("q_id").orderBy(
-        F.col("score_i64").desc(), F.col(id_col).asc()
-    )
-    return (
-        reranked.withColumn("_rn", F.row_number().over(w_final))
-        .filter(F.col("_rn") <= k)
-        .select("q_id", id_col, "cluster", "adc_d2", "score_i64")
+    return merge_topk(reranked, "q_id", id_col, k).select(
+        "q_id", id_col, "cluster", "adc_d2", "score_i64"
     )
 
 

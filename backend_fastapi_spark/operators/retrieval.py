@@ -27,7 +27,7 @@ Determinism: lexical scores are computed in IEEE double with per-term
 scores decimal-accumulated (order-independent sum) and rounded to 1e-6
 before any ranking, so the DuckDB oracle hash-matches; vector scores and
 the MMR argmax run entirely in the package-wide fixed-point int64 domain
-(operators/vector.py::FIXED_SCALE) — exact, no float ordering anywhere.
+(operators/kernel.py::FIXED_SCALE) — exact, no float ordering anywhere.
 """
 
 from __future__ import annotations
@@ -36,7 +36,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from backend_fastapi_spark.operators.text import words
-from backend_fastapi_spark.operators.vector import _fx
+from backend_fastapi_spark.operators.kernel import gram, quantize, stack
 
 BM25_K1 = 1.2
 # (k1 + 1) as its OWN double literal: Python's 1.2 + 1.0 need not equal
@@ -1088,8 +1088,8 @@ def mmr_topk(
 
     With λ = 0.5 the greedy objective  λ·rel − (1−λ)·max-sim-to-selected
     ranks identically to  rel_i64 − max_sim_i64  — pure int64 fixed-point
-    arithmetic end to end (quantization happens IN SPARK via the
-    package-wide ``_fx``, the knn_exact pattern, so no Python rounding
+    arithmetic end to end (quantization happens IN SPARK via
+    ``kernel.quantize``, the knn_exact pattern, so no Python rounding
     can diverge from the oracle's CAST(ROUND(x·1e6)) twin).
 
     Scale shape: knn_exact scans the corpus in place (no shuffle, per
@@ -1114,9 +1114,7 @@ def mmr_topk(
         F.col(query_id).alias("_qid"),
         F.col(corpus_id).alias("_cid"),
         F.col("score_i64").alias("rel_i64"),
-        F.transform(F.col(vec_col), lambda x: _fx(x).cast("double")).alias(
-            "_cv"
-        ),
+        quantize(F.col(vec_col)).alias("_cv"),
     )
 
     qid_ddl = dict(zip(queries.schema.names, queries.schema))[
@@ -1135,22 +1133,10 @@ def mmr_topk(
         qid = pdf["_qid"].iloc[0]
         ids = pdf["_cid"].to_numpy()
         rel = pdf["rel_i64"].to_numpy(dtype=np.int64)
-        m = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["_cv"]])
-        # pairwise dots: for quantized unit-ish components (|fx| ≤
-        # FIXED_SCALE = 1e6) dim·1e12 ≪ 2^53, so the float64 matmul is
-        # integer-exact and the int64 cast lossless. That exactness has
-        # a boundary (ADVICE r11): dim · max|fx|² must stay under 2^53,
-        # or partial sums round and the result silently diverges from
-        # the int64 oracle — fail loudly instead.
-        maxabs = float(np.abs(m).max(initial=0.0))
-        if m.shape[1] * maxabs * maxabs >= 2.0**53:
-            raise ValueError(
-                "mmr_topk: embeddings exceed the exact fixed-point "
-                f"envelope (dim={m.shape[1]}, max|fx|={maxabs:.3g}, "
-                "dim*max^2 >= 2^53) — the float64 similarity matmul "
-                "would round; normalize the vectors or reduce dim"
-            )
-        sim = (m @ m.T).astype(np.int64)
+        # pairwise dots, integer-exact inside the kernel's envelope
+        # (raising outside it, ADVICE r11)
+        m = stack(pdf["_cv"])
+        sim = gram(m, m).astype(np.int64)
         # deterministic candidate order (id asc) so np argmax tie-breaks
         # on id exactly like the oracle's ORDER BY ... vec_id ASC
         order = np.argsort(ids, kind="stable")

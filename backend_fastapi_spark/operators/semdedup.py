@@ -25,10 +25,11 @@ Determinism (so the DuckDB oracle hash-matches bit-for-bit):
 Scale posture:
 - One corpus scan for assignment (zero-shuffle Arrow matmul against the
   k x dim centroid matrix), one shuffle on the cluster key, then a
-  per-cluster numpy int64 Gram matrix inside applyInPandas. Pairwise
-  work is n_c^2 per cluster, the SemDeDup contract: k_clusters is chosen
-  ~ sqrt(n) (paper uses 50k clusters for LAION-440M) so each cluster
-  stays executor-sized; no all-pairs join ever materializes row-wise.
+  per-cluster exact Gram (``kernel.gram_pairs``) inside applyInPandas.
+  Pairwise work is n_c^2 per cluster, the SemDeDup contract: k_clusters
+  is chosen ~ sqrt(n) (paper uses 50k clusters for LAION-440M) so each
+  cluster stays executor-sized; no all-pairs join ever materializes
+  row-wise.
 - The summary variant reduces pairs to per-cluster counts before any
   driver interaction; nothing is collected.
 """
@@ -41,16 +42,20 @@ from pyspark.sql import types as T
 
 from backend_fastapi_spark.operators.ivf import (
     _assign_arrow,
-    _quantize,
     deterministic_medoids,
 )
-from backend_fastapi_spark.operators.vector import FIXED_SCALE
+from backend_fastapi_spark.operators.kernel import (
+    FIXED_SCALE,
+    gram_pairs,
+    quantize,
+    stack,
+)
 
 
 def _assigned(df: DataFrame, k_clusters: int, id_col: str,
               vec_col: str) -> DataFrame:
     med = deterministic_medoids(df, k_clusters, id_col, vec_col)
-    base = df.select(F.col(id_col), _quantize(F.col(vec_col)).alias("_qv"))
+    base = df.select(F.col(id_col), quantize(F.col(vec_col)).alias("_qv"))
     return _assign_arrow(base, med, id_col)
 
 
@@ -65,10 +70,11 @@ def semantic_dedup_pairs(
     """(cluster, id_a, id_b, score_i64) for every within-cluster pair
     with quantized dot >= threshold_i64, id_a < id_b.
 
-    The pair generation is a per-cluster int64 Gram matrix (numpy keeps
-    int64 arithmetic exact; |dot| <= dim * FIXED_SCALE^2 = 6.4e13, far
-    inside 2^63). Only rows above the threshold leave the executor, so
-    the post-filter cardinality — not n_c^2 — is what shuffles onward.
+    The pair generation is a per-cluster exact Gram matrix
+    (``kernel.gram_pairs``: float64 BLAS inside the 2^53 envelope, which
+    it checks, in bounded row strips). Only rows above the threshold
+    leave the executor, so the post-filter cardinality — not n_c^2 — is
+    what shuffles onward.
     """
     import numpy as np
     import pandas as pd
@@ -88,19 +94,14 @@ def semantic_dedup_pairs(
     ])
 
     def pairs(pdf):
-        ids = pdf[id_col].to_numpy()
-        order = np.argsort(ids)
-        ids = ids[order]
-        Q = np.stack(pdf["_qv"].to_numpy())[order].astype(np.int64)
-        G = Q @ Q.T  # int64-exact Gram matrix
-        iu, ju = np.triu_indices(len(ids), k=1)
-        keep = G[iu, ju] >= threshold_i64
+        ia, ib, s = gram_pairs(
+            threshold_i64, pdf[id_col].to_numpy(), stack(pdf["_qv"])
+        )
         return pd.DataFrame({
-            "cluster": np.full(int(keep.sum()), pdf["cluster"].iloc[0],
-                               dtype="int32"),
-            "id_a": ids[iu[keep]],
-            "id_b": ids[ju[keep]],
-            "score_i64": G[iu[keep], ju[keep]],
+            "cluster": np.full(len(ia), pdf["cluster"].iloc[0], dtype="int32"),
+            "id_a": ia,
+            "id_b": ib,
+            "score_i64": s,
         })
 
     return assigned.groupBy("cluster").applyInPandas(pairs, out_schema)
@@ -146,8 +147,8 @@ def k_clusters_for(n_vectors: int, target_cluster: int | None = None) -> int:
     """The SemDeDup scale knob: k_clusters ≈ √n (the paper's sizing —
     50k clusters for LAION-440M), optionally overridden by a target
     per-cluster population. Within-cluster work is a per-cluster
-    int64 Gram matrix, so a cluster of size c costs c² ops and ~8c²
-    bytes transient per task — k ~ √n keeps both bounded as the corpus
+    Gram matrix, so a cluster of size c costs c² ops (computed in row
+    strips of at most ~64 MB) — k ~ √n keeps it bounded as the corpus
     grows. Measured at sf10 (200k vectors): the oracle-fixed k=16
     leaves ~12.5k-vector clusters (≈1.2 GB Gram per task, 5.3 s);
     k=512 ≈ √n runs the same summary in 2.9 s with ~390-vector

@@ -8,10 +8,11 @@ table:
 
 - **Exact kNN** (single or batch): each Arrow batch of quantized corpus
   vectors multiplies against the (driver-small) query matrix — exact
-  float64 matmul, fixed-point ints < 2^53 — and emits only its per-query
-  top-k. The corpus never moves and the |Q|×|corpus| scored set never
-  exists as rows; the final window reduces a k·|Q|·batches candidate
-  trickle and the winners broadcast-join payload columns back.
+  float64 matmul, fixed-point ints < 2^53 (``kernel.exact_topk``) — and
+  emits only its per-query top-k. The corpus never moves and the
+  |Q|×|corpus| scored set never exists as rows; the final window reduces
+  a k·|Q|·batches candidate trickle and the winners broadcast-join
+  payload columns back.
 - **Near-dup pairs**: the same exact-matmul trick per block
   (``near_dup_pairs_matmul``); the pure-codegen blocked join
   (``near_dup_pairs``) remains as the JVM-only form.
@@ -27,39 +28,30 @@ stays in doubles.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from backend_fastapi_spark.operators.util import (
-    bounded_collect,
-    ensure_parallelism,
-    local_frame,
+from backend_fastapi_spark.operators import kernel
+from backend_fastapi_spark.operators.kernel import (  # noqa: F401
+    FIXED_SCALE,  # re-exported: queries.py and api.py read V.FIXED_SCALE
+    collect_queries,
+    exact_topk,
+    fx,
+    gram_pairs,
+    merge_topk,
+    query_matrix,
+    quantize,
+    stack,
+    topk,
 )
-
-FIXED_SCALE = 1_000_000  # 1e6 per element → dot values ≤ 1e12·dim, safe in int64
-
-
-def _fx(x: Column) -> Column:
-    """Quantize one float to fixed-point int64 (half-away-from-zero, matching
-    DuckDB/Spark ROUND). Explicit double cast first: float32 arithmetic would
-    round differently across engines."""
-    return F.round(x.cast("double") * FIXED_SCALE, 0).cast("long")
+from backend_fastapi_spark.operators.util import ensure_parallelism, local_frame
 
 
 def fixed_dot(a: Column, b: Column) -> Column:
     """Exact int64 dot product of two float arrays (≈ cosine for unit vectors,
     scaled by 1e12)."""
     return F.aggregate(
-        F.zip_with(a, b, lambda x, y: _fx(x) * _fx(y)),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-
-
-def fixed_l2sq(a: Column, b: Column) -> Column:
-    """Exact int64 squared-L2 distance (scaled by 1e12)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (_fx(x) - _fx(y)) * (_fx(x) - _fx(y))),
+        F.zip_with(a, b, lambda x, y: fx(x) * fx(y)),
         F.lit(0).cast("long"),
         lambda acc, v: acc + v,
     )
@@ -156,108 +148,35 @@ def knn_exact(
     query row shape + ``score_i64``, ranked best-first per query.
 
     J4/V3 analog: the reference's 1×N FAISS scan generalizes to Q×N with
-    the corpus staying partitioned in place and no scored-pair shuffle.
+    the corpus staying partitioned in place and no scored-pair shuffle:
+    ``kernel.exact_topk`` with one list that every query probes. The
+    queries side is driver-small BY CONTRACT (``kernel.MAX_QUERY_ROWS``)
+    and collected quantized (``kernel.collect_queries``); vectors past
+    the 2^53 envelope raise instead of rounding.
     """
-    import numpy as np
-    import pandas as pd
-
-    # The queries side is driver-small BY CONTRACT (the previous form
-    # broadcast it; collecting it costs the same bytes). Vectors are
-    # quantized to fixed-point int64 IN SPARK (_fx — identical rounding
-    # to every other scorer) before crossing to numpy, so no Python-side
-    # rounding can diverge.
-    MAX_QUERY_ROWS = 100_000  # ~50 MB at 64 dims — broadcast-sized
-
-    q_quant = bounded_collect(
-        queries.select(
-            F.col(query_id).alias("_qid"),
-            F.transform(
-                F.col(query_vec_col), lambda x: _fx(x).cast("double")
-            ).alias("_qv"),
-        ),
-        MAX_QUERY_ROWS,
-    )
-    if len(q_quant) > MAX_QUERY_ROWS:
+    q_rows = collect_queries(queries, query_id, query_vec_col)
+    if q_rows is None:
         raise ValueError(
-            f"knn_exact queries side exceeds {MAX_QUERY_ROWS} rows — it must "
-            "be broadcast-sized; for corpus-vs-corpus scoring use "
+            f"knn_exact queries side exceeds {kernel.MAX_QUERY_ROWS} rows — "
+            "it must be broadcast-sized; for corpus-vs-corpus scoring use "
             "near_dup_pairs_matmul / lsh.ann_similarity_join instead"
         )
-    if not q_quant:
+    if not q_rows:
         empty = corpus.crossJoin(queries).withColumn(
             "score_i64", F.lit(0).cast("long")
         )
         return empty.filter(F.lit(False))
-    q_ids = [r["_qid"] for r in q_quant]
-    qm = np.stack([np.asarray(r["_qv"], dtype=np.float64) for r in q_quant])
-    q_norms = (qm * qm).sum(axis=1)
-    if metric == "dot":
-        order = [F.col("score_i64").desc(), F.col(corpus_id).asc()]
-    elif metric == "l2":
-        order = [F.col("score_i64").asc(), F.col(corpus_id).asc()]
-    else:
-        raise ValueError(f"unknown metric {metric}")
-
-    # Scoring pass: mapInPandas over (id, quantized vec) — each Arrow
-    # batch multiplies against the query matrix (float64 BLAS; every
-    # intermediate is an integer < 2^53, so scores are EXACT int64) and
-    # emits only its per-query top-k. No |corpus|×|Q| row set ever
-    # materializes or shuffles — the old crossJoin + salted-window form
-    # exchanged every scored pair; this exchanges k·|Q| rows per batch.
+    q_ids, qm = query_matrix(q_rows)
     slim = ensure_parallelism(corpus).select(
-        F.col(corpus_id).alias("_cid"),
-        F.transform(F.col(vec_col), lambda x: _fx(x).cast("double")).alias("_cv"),
+        F.col(corpus_id).alias("_cid"), quantize(F.col(vec_col)).alias("_cv")
     )
-    qid_ddl = dict(zip(queries.schema.names, queries.schema))[
-        query_id
-    ].dataType.simpleString()
-    cid_ddl = dict(zip(corpus.schema.names, corpus.schema))[
-        corpus_id
-    ].dataType.simpleString()
-    out_schema = f"_qid {qid_ddl}, _cid {cid_ddl}, score_i64 long"
-    better_desc = metric == "dot"
-
-    def score_batches(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf["_cid"].to_numpy()
-            m = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["_cv"]]
-            )
-            gram = m @ qm.T
-            if metric == "l2":
-                gram = (m * m).sum(axis=1)[:, None] + q_norms[None, :] - 2.0 * gram
-            rows_q, rows_c, rows_s = [], [], []
-            for j, qid in enumerate(q_ids):
-                col = gram[:, j]
-                cids = ids
-                if exclude_self:
-                    mask = np.asarray(ids != qid)
-                    if mask.ndim == 0:
-                        # incomparable id types (e.g. string query ids vs
-                        # int corpus ids) → nothing can be 'self'
-                        mask = np.ones(len(ids), dtype=bool)
-                    col, cids = col[mask], ids[mask]
-                if col.size == 0:
-                    continue
-                # total order: (score better-first, id asc) — identical
-                # to the DataFrame window's tie-break
-                perm = np.lexsort((cids, -col if better_desc else col))[:k]
-                rows_q.extend([qid] * perm.size)
-                rows_c.extend(cids[perm])
-                rows_s.extend(col[perm].astype(np.int64))
-            yield pd.DataFrame({"_qid": rows_q, "_cid": rows_c, "score_i64": rows_s})
-
-    cands = slim.mapInPandas(score_batches, schema=out_schema)
-    # Final exact top-k over the (tiny) per-batch candidate superset.
-    w_final = Window.partitionBy("_qid").orderBy(*order)
-    top = (
-        cands.withColumnRenamed("_cid", corpus_id)
-        .withColumn("_rn", F.row_number().over(w_final))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-    )
+    top = exact_topk(
+        slim, q_ids, qm, k,
+        qid_type=queries.schema[query_id].dataType.simpleString(),
+        metric=metric,
+        exclude_self=exclude_self,
+    ).withColumnRenamed("_cid", corpus_id)
+    score = F.col("score_i64")
     # Restore the full (corpus ⋈ query) row shape the callers expect: the
     # top-k id set is k·|Q| rows — broadcast it back over the corpus, so
     # the corpus still never shuffles.
@@ -269,7 +188,11 @@ def knn_exact(
         .withColumnRenamed("_qid", query_id)
         # contract: ranked best-first per query — the output is k·|Q| rows,
         # so this sort is a constant-size epilogue, not a data-scale sort
-        .orderBy(F.col(query_id), *order)
+        .orderBy(
+            F.col(query_id),
+            score.desc() if metric == "dot" else score.asc(),
+            F.col(corpus_id).asc(),
+        )
     )
 
 
@@ -296,13 +219,12 @@ def near_dup_pairs_matmul(
     identical output to ``near_dup_pairs`` at a fraction of the cost.
 
     Each block's vectors are quantized to fixed-point int64 and multiplied
-    as a dense float64 Gram matrix (``applyInPandas`` → numpy/BLAS). This
-    is EXACT, not approximate: every quantized value is ≤ 1e6·2, every
-    product ≤ ~4e12, and a 64-dim dot sums 64 such terms — all
-    intermediates are integers below 2^53, which float64 represents
-    exactly, so BLAS gives the same int64 scores as the per-pair integer
-    loop regardless of summation order. ~10-100× the throughput of
-    per-element codegen on the pair loop.
+    as a dense float64 Gram matrix (``applyInPandas`` →
+    ``kernel.gram_pairs``). This is EXACT, not approximate: inside the
+    kernel's 2^53 envelope (checked, raising outside it) BLAS gives the
+    same int64 scores as the per-pair integer loop regardless of
+    summation order. ~10-100× the throughput of per-element codegen on
+    the pair loop.
 
     Parallelism (r8): a block is decomposed into ``m = ceil(n /
     chunk_rows)`` hash-assigned chunks and every CHUNK PAIR (i ≤ j)
@@ -335,15 +257,13 @@ def near_dup_pairs_matmul(
     (e.g. from a parquet footer's row count) should pass None when every
     block fits one chunk; output is row-identical either way.
     """
-    import numpy as np
     import pandas as pd
 
     quantized = ensure_parallelism(df).select(
         F.col(block_col).alias("_blk"),
         F.col(id_col).alias("_id"),
-        F.transform(F.col(vec_col), lambda x: _fx(x).cast("double")).alias("_q"),
+        quantize(F.col(vec_col)).alias("_q"),
     )
-    strip_budget = 64 << 20  # gram-strip bytes per task
 
     # Chunk index: hash-assigned (no per-block sort/window needed; chunk
     # membership only has to be deterministic, not ordered). m derives
@@ -390,53 +310,22 @@ def near_dup_pairs_matmul(
                 "through lsh.ann_similarity_join (hash-bucketed, bounded "
                 "block key)"
             )
-        self_pair = len(key) == 1 or key[1] == key[2]
-        a = pdf if self_pair else pdf[pdf["_side"] == 0]
-        if len(a) == 0:
-            # Hash assignment can leave a residue class empty (duplicate
-            # or low-cardinality ids): the partner task has nothing to do.
-            return pd.DataFrame({"id_a": [], "id_b": [], "sim_i64": []})
-        ids_a = a["_id"].to_numpy()
-        ma = np.stack(a["_q"].to_numpy()).astype(np.float64)
-        if self_pair:
-            ids_b, mb = ids_a, ma
+        ids, m = pdf["_id"].to_numpy(), stack(pdf["_q"])
+        if len(key) == 1 or key[1] == key[2]:
+            ia, ib, s = gram_pairs(threshold_i64, ids, m, strip_rows=strip_rows)
         else:
-            b = pdf[pdf["_side"] == 1]
-            if len(b) == 0:
-                return pd.DataFrame({"id_a": [], "id_b": [], "sim_i64": []})
-            ids_b = b["_id"].to_numpy()
-            mb = np.stack(b["_q"].to_numpy()).astype(np.float64)
-        strip = max(
-            64, min(strip_rows, strip_budget // max(len(ids_b) * 8, 1))
-        )
-        out_a, out_b, out_s = [], [], []
-        for s0 in range(0, len(ids_a), strip):
-            s1 = min(s0 + strip, len(ids_a))
-            gram = ma[s0:s1] @ mb.T  # exact: all intermediates < 2^53
-            rr, cc = np.nonzero(gram >= threshold_i64)
-            if rr.size == 0:
-                continue
-            ia, ib = ids_a[s0 + rr], ids_b[cc]
-            scores = gram[rr, cc].astype(np.int64)
-            # Orient id_a < id_b. Self-pair tasks see each unordered pair
-            # in both orientations (plus the diagonal) — keeping the
-            # strictly-less half emits it exactly once; cross-chunk tasks
-            # see each pair once in arbitrary orientation — swap to
-            # canonical order.
-            lt = ia < ib
-            if self_pair:
-                ia, ib, scores = ia[lt], ib[lt], scores[lt]
-            else:
-                ia, ib = np.where(lt, ia, ib), np.where(lt, ib, ia)
-            out_a.extend(ia)
-            out_b.extend(ib)
-            out_s.extend(scores)
-        return pd.DataFrame({"id_a": out_a, "id_b": out_b, "sim_i64": out_s})
+            # Hash assignment can leave a side empty (duplicate or
+            # low-cardinality ids): gram_pairs then emits nothing.
+            a = (pdf["_side"] == 0).to_numpy()
+            ia, ib, s = gram_pairs(
+                threshold_i64, ids[a], m[a], ids[~a], m[~a], strip_rows
+            )
+        return pd.DataFrame({"id_a": ia, "id_b": ib, "sim_i64": s})
 
     # id columns keep the INPUT id type (same derived-DDL discipline as
     # knn_exact) — a hard-coded long would break/corrupt string ids that
     # the plain near_dup_pairs path handles fine.
-    id_ddl = dict(zip(df.schema.names, df.schema))[id_col].dataType.simpleString()
+    id_ddl = df.schema[id_col].dataType.simpleString()
     out_schema = f"id_a {id_ddl}, id_b {id_ddl}, sim_i64 long"
     if chunk_rows is None:
         return quantized.groupBy("_blk").applyInPandas(chunk_pair, out_schema)
@@ -474,7 +363,7 @@ def near_dup_pairs(
         )
 
     quantized = ensure_parallelism(df).withColumn(
-        "_qvec", F.transform(F.col(vec_col), _fx)
+        "_qvec", quantize(F.col(vec_col))
     )
     left = quantized.select(
         F.col(id_col).alias("id_a"),
@@ -516,7 +405,7 @@ def sq8_codes(
     df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
 ) -> DataFrame:
     """(id, scale_fx, code): deterministic symmetric int8 quantization.
-    scale_fx = max|fx(v)| (int64 fixed-point, the established _fx
+    scale_fx = max|fx(v)| (int64 fixed-point, ``kernel.fx``
     rounding); code_i = round(fx(v_i)·127/scale_fx) ∈ [-127, 127]. The
     zero vector quantizes to all-zero codes (scale 0 guard). Pure
     codegen — transform/array_max/round, no UDF.
@@ -528,13 +417,23 @@ def sq8_codes(
     unguarded pathological input would WRAP the int64 score and silently
     corrupt the ranking (review r10). assert_true fails the job loudly
     instead; the check is folded into the scale expression so the
-    optimizer cannot prune it."""
-    fxv = F.transform(F.col(vec_col), _fx)
-    with_fx = df.select(F.col(id_col), fxv.alias("_fxv"))
-    s_raw = F.array_max(F.transform(F.col("_fxv"), F.abs))
+    optimizer cannot prune it. It is stricter than the kernel's 2^53
+    envelope (dim·s² < 2^63/127² ≈ 5.7e14), so it also keeps the exact
+    re-rank dot of ``sq8_topk`` exact."""
+    with_fx = df.select(F.col(id_col), quantize(F.col(vec_col)).alias("_fxv"))
+    s, code = _sq8(F.col("_fxv"))
+    return with_fx.select(
+        F.col(id_col), s.alias("scale_fx"), code.alias("code")
+    )
+
+
+def _sq8(fxv: Column) -> tuple[Column, Column]:
+    """(scale_fx, code) of a quantized vector column — sq8_codes' rule,
+    with its per-row int64 envelope assert."""
+    s_raw = F.array_max(F.transform(fxv, F.abs))
     bound_ok = (
         s_raw.cast("double") * s_raw.cast("double")
-        * F.size(F.col("_fxv")).cast("double") * F.lit(127.0 * 127.0)
+        * F.size(fxv).cast("double") * F.lit(127.0 * 127.0)
     ) < F.lit(float(2**63))
     # assert_true returns NULL on success; folding it into the live
     # expression keeps it in the plan
@@ -542,29 +441,27 @@ def sq8_codes(
         F.assert_true(
             bound_ok,
             F.concat(
-                F.lit("sq8: |component| too large for exact int64 "
-                      "scoring (scale_fx="),
+                F.lit("sq8: vectors exceed the exact fixed-point envelope "
+                      "of int64 code scoring (scale_fx="),
                 s_raw.cast("string"),
                 F.lit(", dim="),
-                F.size(F.col("_fxv")).cast("string"),
+                F.size(fxv).cast("string"),
                 F.lit(") — normalize the embeddings"),
             ),
         ).isNull(),
         s_raw,
     )
     code = F.when(
-        s == 0, F.transform(F.col("_fxv"), lambda x: F.lit(0).cast("int"))
+        s == 0, F.transform(fxv, lambda x: F.lit(0).cast("int"))
     ).otherwise(
         F.transform(
-            F.col("_fxv"),
+            fxv,
             lambda x: F.round(
                 x.cast("double") * 127.0 / s.cast("double"), 0
             ).cast("int"),
         )
     )
-    return with_fx.select(
-        F.col(id_col), s.alias("scale_fx"), code.alias("code")
-    )
+    return s, code
 
 
 def sq8_approx_dot(code_col, qcode_col, scale_col, qscale_col) -> Column:
@@ -602,10 +499,11 @@ def sq8_topk(
     scoring every (vector, query) pair with the exact-int64 approximate
     dot Σ(c_v·c_q)·s_v·s_q (bounded: 64·127²·1e12 < 2^63) and keeping
     the ``rerank``·k best per query. The query side is driver-small by
-    contract (same MAX guard as knn_exact) and ships to executors
-    INSIDE the mapInPandas closure as an int64 code matrix — the exact
-    knn_exact pattern (vector.py:154-233): each Arrow batch of corpus
-    codes matmuls against it and emits only its per-batch top
+    contract (``kernel.collect_queries`` and its ``MAX_QUERY_ROWS``
+    bound, as for knn_exact) and ships to executors INSIDE the
+    mapInPandas closure as an int64 code matrix — the
+    ``kernel.exact_topk`` pattern: each Arrow batch of corpus codes
+    matmuls against it and emits only its per-batch top
     ``rerank``·k per query, so no |codes|×|Q| row set ever exists and
     plan size is independent of |Q| (the previous form exploded each
     query as a per-element LITERAL array — 6.4 M expression nodes at
@@ -624,25 +522,22 @@ def sq8_topk(
     recall@10 = 1.0 at rerank=4 on the testdata embeddings and plant an
     adversarial near-tie to show the re-rank (not the approx order)
     decides the final ranking."""
-    MAX_QUERY_ROWS = 100_000
-    qcodes = sq8_codes(queries, id_col="q_id", vec_col="q_embedding")
-
-    qrows = bounded_collect(
-        qcodes.join(queries.select("q_id", "q_embedding"), "q_id"),
-        MAX_QUERY_ROWS,
+    q_scale, q_code = _sq8(quantize(F.col("q_embedding")))
+    qrows = collect_queries(
+        queries, extra=(q_scale.alias("scale_fx"), q_code.alias("code"))
     )
-    if len(qrows) > MAX_QUERY_ROWS:
+    if qrows is None:
         raise ValueError(
-            f"sq8_topk queries side exceeds {MAX_QUERY_ROWS} rows — it "
+            f"sq8_topk queries side exceeds {kernel.MAX_QUERY_ROWS} rows — it "
             "must be broadcast-sized"
         )
     if codes is None:
         codes = sq8_codes(corpus, id_col=corpus_id, vec_col=vec_col)
+    q_id_type = queries.schema["q_id"].dataType
     if not qrows:
         # schema-faithful empty result: q_id keeps the queries frame's
         # type so unionByName/parquet appends across batches never see a
         # type flip on the empty-input run (review r10)
-        q_id_type = queries.schema["q_id"].dataType
         return (
             codes.select(
                 F.lit(None).cast(q_id_type).alias("q_id"),
@@ -655,41 +550,33 @@ def sq8_topk(
     import numpy as np
     import pandas as pd
 
-    q_ids = [r["q_id"] for r in qrows]
-    QC = np.stack(
-        [np.asarray(r["code"], dtype=np.int64) for r in qrows]
-    )  # (|Q|, dim)
-    q_scales = np.asarray(
-        [int(r["scale_fx"]) for r in qrows], dtype=np.int64
-    )
+    q_ids = [r["_qid"] for r in qrows]
+    QC = stack([r["code"] for r in qrows], np.int64)  # (|Q|, dim)
+    q_scales = np.asarray([r["scale_fx"] for r in qrows], dtype=np.int64)
     R = rerank * k
-    qid_ddl = dict(queries.dtypes)["q_id"]
-    cid_ddl = dict(codes.dtypes)[corpus_id]
-    out_schema = f"q_id {qid_ddl}, {corpus_id} {cid_ddl}, approx_i64 long"
+    cid_ddl = codes.schema[corpus_id].dataType.simpleString()
+    out_schema = (
+        f"q_id {q_id_type.simpleString()}, {corpus_id} {cid_ddl}, "
+        "approx_i64 long"
+    )
 
     def score_batches(batches):
         for pdf in batches:
             if pdf.empty:
                 continue
             ids = pdf["_cid"].to_numpy()
-            M = np.stack(
-                [np.asarray(c, dtype=np.int64) for c in pdf["code"]]
-            )  # (n, dim)
             sv = pdf["scale_fx"].to_numpy().astype(np.int64)
             # Σ(c_v·c_q) · s_v · s_q — int64 throughout (numpy keeps
             # integer arithmetic for int64 inputs), exact under the
             # bound sq8_codes enforces per row at quantization time
-            approx = (M @ QC.T) * sv[:, None] * q_scales[None, :]
+            codes_m = stack(pdf["code"], np.int64)
+            approx = (codes_m @ QC.T) * sv[:, None] * q_scales[None, :]
             rows_q, rows_c, rows_s = [], [], []
             for j, qid in enumerate(q_ids):
-                col = approx[:, j]
-                # total order (approx DESC, id ASC) — identical to the
-                # global window below, so the batch top-R is a superset
-                # of the global top-R
-                perm = np.lexsort((ids, -col))[:R]
+                perm = topk(approx[:, j], ids, R, desc=True)
                 rows_q.extend([qid] * perm.size)
                 rows_c.extend(ids[perm])
-                rows_s.extend(col[perm])
+                rows_s.extend(approx[perm, j])
             yield pd.DataFrame(
                 {"q_id": rows_q, corpus_id: rows_c, "approx_i64": rows_s}
             )
@@ -697,32 +584,22 @@ def sq8_topk(
     slim = ensure_parallelism(codes).select(
         F.col(corpus_id).alias("_cid"), "scale_fx", "code"
     )
-    scored = slim.mapInPandas(score_batches, schema=out_schema)
-    w1 = Window.partitionBy("q_id").orderBy(
-        F.col("approx_i64").desc(), F.col(corpus_id).asc()
-    )
-    cand = (
-        scored.withColumn("_rn", F.row_number().over(w1))
-        .filter(F.col("_rn") <= rerank * k)
-        .drop("_rn")
+    cand = merge_topk(
+        slim.mapInPandas(score_batches, schema=out_schema),
+        "q_id", corpus_id, R, score="approx_i64",
     )
     qvecs = local_frame(
         corpus.sparkSession,
-        [(r["q_id"], [float(x) for x in r["q_embedding"]]) for r in qrows],
-        "q_id " + dict(queries.dtypes)["q_id"] + ", q_embedding array<double>",
+        [(r["_qid"], r["_qv"]) for r in qrows],
+        f"q_id {q_id_type.simpleString()}, _qv array<bigint>",
     )
     rer = (
         cand.join(corpus.select(F.col(corpus_id), vec_col), corpus_id)
         .join(F.broadcast(qvecs), "q_id")
         .withColumn(
-            "score_i64", fixed_dot(F.col(vec_col), F.col("q_embedding"))
+            "score_i64", int_dot(quantize(F.col(vec_col)), F.col("_qv"))
         )
     )
-    w2 = Window.partitionBy("q_id").orderBy(
-        F.col("score_i64").desc(), F.col(corpus_id).asc()
-    )
-    return (
-        rer.withColumn("_rn", F.row_number().over(w2))
-        .filter(F.col("_rn") <= k)
-        .select("q_id", corpus_id, "approx_i64", "score_i64")
+    return merge_topk(rer, "q_id", corpus_id, k).select(
+        "q_id", corpus_id, "approx_i64", "score_i64"
     )

@@ -5117,10 +5117,10 @@ def q_mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     selected — the diversity rerank RAG retrievers run between recall and
     prompt assembly (reference analog: rag_service's retriever feeding
     doc assembly; W2's round-robin diversification is the grouped-attr
-    cousin). Entirely fixed-point int64 (quantized in Spark via _fx, the
-    knn_exact pattern), so the greedy argmax chain is exact in both
-    engines; the oracle re-derives it as a recursive CTE over the
-    candidate prefix sums. Scale shape: corpus scanned once in place by
+    cousin). Entirely fixed-point int64 (quantized in Spark via
+    kernel.quantize, the knn_exact pattern), so the greedy argmax chain
+    is exact in both engines; the oracle re-derives it as a recursive
+    CTE over the candidate prefix sums. Scale shape: corpus scanned once in place by
     knn_exact; the greedy loop touches only |Q| groups of 20 rows."""
     return RT.mmr_topk(
         _t(spark, sf_dir, "embeddings"),

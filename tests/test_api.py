@@ -245,6 +245,49 @@ def test_engine_substrates_rebuild_when_table_files_change(
     assert after == calls(open_engine(str(fresh_dir)))
 
 
+def test_engine_sql_views_follow_rewritten_table(spark, open_engine, tmp_path):
+    """Engine.sql and Engine.knn_sql read a table's files as they are now.
+    The table is split into at least one file per core, so the persisted
+    vectors substrate is the bare scan (ensure_parallelism adds nothing)
+    and Spark would substitute its stale cache into the re-bound view's
+    plan unless it is dropped with the view."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from tests.conftest import SF_SMOKE
+
+    emb = pq.read_table(f"{SF_SMOKE}/embeddings.parquet")
+    old, new = emb.slice(0, 40), emb.slice(40, 80)
+    parts = 2 * spark.sparkContext.defaultParallelism
+
+    def write(table, d):
+        shutil.rmtree(d, ignore_errors=True)
+        d.mkdir(parents=True)
+        step = -(-table.num_rows // parts)
+        for i in range(parts):
+            pq.write_table(table.slice(i * step, step), str(d / f"part-{i}.parquet"))
+
+    live, fresh_dir = tmp_path / "live", tmp_path / "fresh"
+    write(old, live / "embeddings.parquet")
+    write(new, fresh_dir / "embeddings.parquet")
+    qvec = [float(x) for x in new.column("embedding")[0].as_py()]
+
+    def calls(e):
+        return (
+            _rows(e.sql("SELECT count(*) AS n FROM embeddings")),
+            _rows(e.knn_sql(qvec, k=3)),
+            _rows(e.knn(qvec, k=3)),
+        )
+
+    eng = open_engine(str(live))
+    before = calls(eng)
+    write(new, live / "embeddings.parquet")
+    after = calls(eng)
+    assert after != before and after[0] == [(80,)]
+    assert after == calls(open_engine(str(fresh_dir)))
+
+
 def test_ivf_recall_vs_exact(spark):
     emb = spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet")
     assigned, centroids = build_ivf(emb, k_clusters=8)
@@ -1297,10 +1340,11 @@ def test_ivf_adaptive_probe_rule_and_envelope(spark):
     # (b) the probe set obeys the integer ratio rule verbatim
     med = deterministic_medoids(emb, 8)
     probed = _medoid_probe_adaptive(queries, med, 4, 3, 2).collect()
-    from backend_fastapi_spark.operators.ivf import _l2_i64_lit, _quantize
+    from backend_fastapi_spark.operators.ivf import _l2_i64_lit
+    from backend_fastapi_spark.operators.kernel import quantize
 
     dists = (
-        queries.select("q_id", _quantize(F.col("q_embedding")).alias("_pq"))
+        queries.select("q_id", quantize(F.col("q_embedding")).alias("_pq"))
         .select(
             "q_id",
             *[
@@ -1398,9 +1442,8 @@ def test_ivf_search_persisted_adaptive_matches_fixed_at_cap(spark, tmp_path):
 def test_ivf_search_over_arrow_scorer_matches_join_form(spark, tmp_path):
     """The Arrow-matmul scorer (r14) is row-identical to the join +
     interpreted fixed_dot form it replaced — same candidates, same exact
-    int64 scores, same (score DESC, id ASC) top-k — and the per-batch
-    2^53 exactness envelope fails loudly instead of rounding."""
-    import pytest as _pytest
+    int64 scores, same (score DESC, id ASC) top-k. Its 2^53 envelope is
+    one input of tests/test_kernel.py's envelope test."""
     from pyspark.sql import Window
 
     from backend_fastapi_spark.operators.ivf import (
@@ -1450,17 +1493,6 @@ def test_ivf_search_over_arrow_scorer_matches_join_form(spark, tmp_path):
     )
     assert got == ref and len(got) > 0
 
-    # exactness envelope: components far outside |fx| < ~2^26/sqrt(dim)
-    # must raise, not silently round in the float64 matmul
-    huge = spark.createDataFrame(
-        [(0, [4.0e9] * 64)], "q_id long, q_embedding array<double>"
-    )
-    with _pytest.raises(Exception, match="envelope"):
-        ivf_search_over(
-            lists, None, huge, k=5,
-            probe_rows=[(0, c) for c in probed],
-        ).collect()
-
 
 def test_grouped_pairs_matches_join_form_and_tolerates_dups(spark):
     """grouped_pairs (r13 group-local pair generation, r14 codegen
@@ -1508,9 +1540,43 @@ def test_probed_clusters_distinguishes_empty_from_over_bound(spark):
 
 
 def test_ivf_search_query_bound_reaches_join_fallback(spark, tmp_path, monkeypatch):
-    """The centroid probe and the scorer share one query-side bound: past
-    it the probe falls back to the distributed kNN and the scorer to the
-    broadcast-join plan, with the same rows."""
+    """Past the kernel's query-side bound the scorer falls back to the
+    broadcast-join plan, with the same rows. knn_exact raises past the
+    same bound, so a persisted search's distributed probe cannot take
+    that route: the scorer runs over the driver probe's frame."""
+    from backend_fastapi_spark.operators import ivf as I
+    from backend_fastapi_spark.operators import kernel as K
+
+    emb = spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet")
+    assigned, centroids = build_ivf(emb, k_clusters=8)
+    path = str(tmp_path / "ivf")
+    I.write_ivf_index(assigned, centroids, path)
+    queries = emb.filter(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_embedding")
+    )
+    rows, _ = I._centroid_probe(centroids, queries, 3)
+    probe, probed = I._probe_frames(spark, centroids, queries, rows)
+    lists = I.read_ivf_lists(spark, path).filter(F.col("cluster").isin(probed))
+
+    def search():
+        df = I.ivf_search_over(lists, probe, queries, k=5)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return _rows(df), plan
+
+    fast, fast_plan = search()
+    assert fast == _rows(I.ivf_search_persisted(spark, path, queries, k=5, nprobe=3))
+    monkeypatch.setattr(K, "MAX_QUERY_ROWS", 2)
+    slow, slow_plan = search()
+    assert "MapInPandas" in fast_plan and "zip_with" not in fast_plan
+    assert "zip_with" in slow_plan  # fixed_dot: the join fallback scorer
+    assert len(fast) == 15 and slow == fast
+
+
+def test_ivf_distributed_probe_matches_driver_probe(spark, tmp_path, monkeypatch):
+    """Past the driver-probe pair bound both persisted searches probe with
+    the distributed kNN: the same rows as the driver probe, and the probe
+    pairs are collected with the probe's window stage left parallel — no
+    single-task ``Coalesce 1`` over it."""
     from backend_fastapi_spark.operators import ivf as I
 
     emb = spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet")
@@ -1521,14 +1587,28 @@ def test_ivf_search_query_bound_reaches_join_fallback(spark, tmp_path, monkeypat
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_embedding")
     )
 
-    def search():
-        df = I.ivf_search_persisted(spark, path, queries, k=5, nprobe=3)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        return _rows(df), plan
+    def searches():
+        return (
+            _rows(I.ivf_search_persisted(spark, path, queries, k=5, nprobe=3)),
+            _rows(I.ivf_search_persisted_adaptive(
+                spark, path, queries, k=5, nprobe_max=3
+            )),
+        )
 
-    fast, fast_plan = search()
-    monkeypatch.setattr(I, "MAX_QUERY_ROWS", 2)
-    slow, slow_plan = search()
-    assert "MapInPandas" in fast_plan and "zip_with" not in fast_plan
-    assert "zip_with" in slow_plan  # fixed_dot: the join fallback scorer
-    assert len(fast) == 15 and slow == fast
+    fast = searches()
+    plans = []
+    frame_cls = type(queries)
+    collect = frame_cls.collect
+
+    def recording_collect(self):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return collect(self)
+
+    # 8 centroids x 3 queries = 24 pairs > 10: the distributed probe; its
+    # 9 (q_id, cluster) pairs still fit the driver
+    monkeypatch.setattr(I, "_PROBE_DRIVER_MAX_PAIRS", 10)
+    monkeypatch.setattr(frame_cls, "collect", recording_collect)
+    slow = searches()
+    assert len(fast[0]) == 15 and slow == fast
+    windowed = [p for p in plans if "Window" in p and "cluster" in p]
+    assert windowed and not any("Coalesce 1" in p for p in windowed)

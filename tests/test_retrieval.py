@@ -666,21 +666,6 @@ def test_compact_exclusion_keeps_crash_retry_exactly_once(spark, tmp_path):
     assert total_docs() > n_total
 
 
-def test_mmr_guards_fixed_point_overflow(spark):
-    # ADVICE r11: the float64-matmul exactness claim has a boundary
-    # (dim·max|fx|² < 2^53); vectors past it must fail loudly, not
-    # silently diverge from the int64 oracle.
-    corpus = spark.createDataFrame(
-        [(0, [3000.0, 0.0]), (1, [0.0, 3000.0]), (2, [2000.0, 2000.0])],
-        "vec_id long, embedding array<float>",
-    )
-    queries = spark.createDataFrame(
-        [(0, [3000.0, 0.0])], "q_id long, q_embedding array<float>"
-    )
-    with pytest.raises(Exception, match="fixed-point envelope"):
-        RT.mmr_topk(corpus, queries, shortlist=3, select=2).collect()
-
-
 # ---------------------------------------------------------------------------
 # Champion lists (impact-ordered static index pruning)
 # ---------------------------------------------------------------------------
