@@ -343,12 +343,7 @@ class Engine:
     def dedup_clusters(self, threshold: float = 0.8) -> DataFrame:
         """Near-dup PAIRS → canonical GROUPS: (doc_id, cluster_id) via
         connected components over the exact-Jaccard edge list."""
-        edges = D.ngram_jaccard_pairs(
-            self.table("documents"), threshold, max_shingle_df=64
-        ).select("id_a", "id_b")
-        return D.connected_components(edges).select(
-            F.col("id").alias("doc_id"), "cluster_id"
-        )
+        return D.dup_clusters(self.table("documents"), threshold)
 
     def corpus_report(self) -> DataFrame:
         """Training-corpus prep dashboard: per-(lang, split) doc counts,

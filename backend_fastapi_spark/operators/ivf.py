@@ -29,6 +29,7 @@ from backend_fastapi_spark.operators.kernel import (
     merge_topk,
     quantize,
     query_matrix,
+    sq_l2,
     stack,
     topk_scorer,
 )
@@ -757,7 +758,6 @@ def ivf_search_persisted(
         rows, q_quant = res
         probe = None
         probe_rows = [(q, c) for q, c, _ in rows]
-        probed = sorted({int(c) for _, c in probe_rows})
     else:
         probe = knn_exact(
             centroids.withColumnRenamed("centroid", "embedding"),
@@ -772,8 +772,23 @@ def ivf_search_persisted(
         # form ran the probe plan once for the distinct-collect and
         # AGAIN embedded in the search plan.
         probe_rows, q_quant = _collect_probe_pairs(probe), None
-        probed = _probed_clusters(probe, probe_rows)
+    return _search_probed(
+        spark, path, probe, probe_rows, q_quant, queries, k, corpus_id
+    )
+
+
+def _search_probed(
+    spark, path, probe, probe_rows, q_quant, queries, k, corpus_id
+) -> DataFrame:
+    """The persisted searches' scoring step over the probed lists only.
+    ``probe_rows`` None (the probe is over the collect bound) reads the
+    probed ids off the probe plan and goes straight to the join form:
+    ``ivf_search_over`` would only collect the same over-bound probe
+    again to find it over the bound."""
+    probed = _probed_clusters(probe, probe_rows)
     lists = read_ivf_lists(spark, path).filter(F.col("cluster").isin(probed))
+    if probe_rows is None:
+        return _join_scored(lists, probe, queries, k, corpus_id)
     return ivf_search_over(
         lists, probe, queries, k=k, corpus_id=corpus_id,
         probe_rows=probe_rows, q_quant=q_quant,
@@ -846,7 +861,6 @@ def ivf_search_persisted_adaptive(
             (q, c) for q, c, d in rows
             if d * alpha_den <= dmin[q] * alpha_num
         ]
-        probed = sorted({int(c) for _, c in probe_rows})
     else:
         cand = knn_exact(
             centroids.withColumnRenamed("centroid", "embedding"),
@@ -866,11 +880,8 @@ def ivf_search_persisted_adaptive(
             .select("q_id", "cluster")
         )
         probe_rows, q_quant = _collect_probe_pairs(probe), None
-        probed = _probed_clusters(probe, probe_rows)
-    lists = read_ivf_lists(spark, path).filter(F.col("cluster").isin(probed))
-    return ivf_search_over(
-        lists, probe, queries, k=k, corpus_id=corpus_id,
-        probe_rows=probe_rows, q_quant=q_quant,
+    return _search_probed(
+        spark, path, probe, probe_rows, q_quant, queries, k, corpus_id
     )
 
 
@@ -1051,10 +1062,10 @@ def trained_centroids(
 
 def _assign_arrow(base: DataFrame, med: list[tuple[int, list[int]]],
                   id_col: str) -> DataFrame:
-    """Coarse assignment as a per-Arrow-batch int64 matmul (the same
-    batch-matmul machinery as vector.knn_exact): per batch,
-    d²(q, c) = |q|² − 2·q·Cᵀ + |c|², all in int64 (components ≤ 1e6 →
-    every term < 2.6e14, exact), argmin over the cluster axis.
+    """Coarse assignment as a per-Arrow-batch matmul (the same
+    batch-matmul machinery as vector.knn_exact): per batch, the exact
+    fixed-point d²(q, c) of ``kernel.sq_l2`` (raising outside the
+    envelope), argmin over the cluster axis.
     np.argmin takes the FIRST minimum — exactly the (distance, cluster)
     tie-break the interpreted form and the SQL oracle use. One corpus
     scan, zero shuffle, and ~100× the throughput of per-row interpreted
@@ -1065,7 +1076,6 @@ def _assign_arrow(base: DataFrame, med: list[tuple[int, list[int]]],
     from pyspark.sql import types as T
 
     C = np.array([cv for _, cv in med], dtype=np.int64)  # (k, dim)
-    c_sq = (C * C).sum(axis=1)  # (k,)
     out_schema = T.StructType(
         list(base.schema.fields)
         + [T.StructField("cluster", T.IntegerType(), False)]
@@ -1075,10 +1085,7 @@ def _assign_arrow(base: DataFrame, med: list[tuple[int, list[int]]],
         for pdf in batches:
             if pdf.empty:  # np.stack raises on zero arrays
                 continue
-            Q = np.stack(pdf["_qv"].to_numpy()).astype(np.int64)  # (n, dim)
-            # int64 matmul: numpy keeps integer arithmetic for int64
-            # inputs, so every distance is exact (no float rounding).
-            d2 = (Q * Q).sum(axis=1, keepdims=True) - 2 * (Q @ C.T) + c_sq
+            d2 = sq_l2(stack(pdf["_qv"]), C)
             yield pd.DataFrame(
                 {
                     **{c: pdf[c] for c in pdf.columns},

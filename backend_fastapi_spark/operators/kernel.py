@@ -99,6 +99,21 @@ def check_exact(dim: int, a_max: float, b_max: float) -> None:
         )
 
 
+def sq_l2(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Squared-L2 distances between the fixed-point rows of ``a`` and
+    ``b`` as |a|² − 2a·b + |b|², one float64 matmul: integer-exact, or a
+    ValueError outside the envelope (int64 arithmetic would instead wrap
+    silently and pick the wrong nearest row)."""
+    a = np.asarray(a, dtype=np.float64)
+    b = np.asarray(b, dtype=np.float64)
+    bound = absmax(a) + absmax(b)
+    check_exact(a.shape[1], bound, bound)
+    return (
+        (a * a).sum(axis=1)[:, None] - 2.0 * (a @ b.T)
+        + (b * b).sum(axis=1)[None, :]
+    )
+
+
 def gram(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     """``a @ b.T`` of quantized float64 rows — integer-exact, or a
     ValueError outside the envelope."""
@@ -133,7 +148,6 @@ def topk_scorer(
         raise ValueError(f"unknown metric {metric}")
     l2 = metric == "l2"
     q_max = absmax(qm)
-    q_norms = (qm * qm).sum(axis=1)
     every_query = np.arange(len(q_ids))
 
     def score(ids: np.ndarray, m: np.ndarray, groups: np.ndarray | None = None):
@@ -155,10 +169,7 @@ def topk_scorer(
         for idx, js in parts:
             if js is None or js.size == 0:
                 continue
-            g = m[idx] @ qm[js].T
-            if l2:
-                norms = (m[idx] * m[idx]).sum(axis=1)
-                g = norms[:, None] + q_norms[js][None, :] - 2.0 * g
+            g = sq_l2(m[idx], qm[js]) if l2 else m[idx] @ qm[js].T
             for col, j in enumerate(js):
                 hits.setdefault(j, []).append((idx, g[:, col]))
         out_q, out_i, out_s = [], [], []

@@ -38,7 +38,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from backend_fastapi_spark.operators.ivf import deterministic_medoids
-from backend_fastapi_spark.operators.kernel import FIXED_SCALE, merge_topk, quantize
+from backend_fastapi_spark.operators.kernel import (
+    FIXED_SCALE,
+    merge_topk,
+    quantize,
+    sq_l2,
+)
 from backend_fastapi_spark.operators.vector import int_dot
 
 M_SUB = 8  # subspaces
@@ -136,6 +141,17 @@ def pq_codebooks_trained(
     return np.stack(cbs)
 
 
+def _distance_tables(Qs, cb):
+    """dt[i, s, c] = the exact squared L2 of query i's subvector s to
+    codeword c of codebook s (``kernel.sq_l2``), as int64 so the ADC sums
+    over subspaces stay exact."""
+    import numpy as np
+
+    return np.stack(
+        [sq_l2(Qs[:, s], cb[s]) for s in range(M_SUB)], axis=1
+    ).astype(np.int64)
+
+
 def pq_encode(
     df: DataFrame,
     cb,
@@ -143,14 +159,13 @@ def pq_encode(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """(id_col, code0..code{M_SUB-1}) — the 4-byte-per-vector compressed
-    index. Per Arrow batch and subspace s: d² over the K_CODES codebook
-    rows via int64 matmul, argmin (first-min = the (d², code) tie-break
-    the SQL oracle's row_number uses). One scan, zero shuffle."""
+    index. Per Arrow batch and subspace s: the exact d² over the K_CODES
+    codebook rows (``kernel.sq_l2``), argmin (first-min = the (d², code)
+    tie-break the SQL oracle's row_number uses). One scan, zero shuffle."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
 
-    cb_sq = (cb * cb).sum(axis=2)  # (M_SUB, K)
     out_schema = T.StructType(
         [df.schema[id_col]]
         + [T.StructField(f"code{s}", T.IntegerType(), False) for s in range(M_SUB)]
@@ -163,11 +178,7 @@ def pq_encode(
             Xs = X.reshape(len(X), M_SUB, SUB_DIM)
             out = {id_col: pdf[id_col]}
             for s in range(M_SUB):
-                d2 = (
-                    (Xs[:, s] * Xs[:, s]).sum(axis=1, keepdims=True)
-                    - 2 * (Xs[:, s] @ cb[s].T)
-                    + cb_sq[s]
-                )
+                d2 = sq_l2(Xs[:, s], cb[s])
                 out[f"code{s}"] = d2.argmin(axis=1).astype("int32")
             yield pd.DataFrame(out)
 
@@ -215,13 +226,7 @@ def pq_adc_topk(
         )
     q_ids = np.array([r["q_id"] for r in q_rows])
     Qv = np.array([r["_pq"] for r in q_rows], dtype=np.int64)  # (nq, dim)
-    Qs = Qv.reshape(len(Qv), M_SUB, SUB_DIM)
-    # dt[i, s, c] = ||q_i,s - cb[s,c]||²  — (nq, M_SUB, K) int64
-    dt = (
-        (Qs * Qs).sum(axis=2)[:, :, None]
-        - 2 * np.einsum("qsd,skd->qsk", Qs, cb)
-        + (cb * cb).sum(axis=2)[None, :, :]
-    )
+    dt = _distance_tables(Qv.reshape(len(Qv), M_SUB, SUB_DIM), cb)
 
     enc = pq_encode(df, cb, id_col, vec_col)
     id_field = enc.schema[id_col]
@@ -324,9 +329,7 @@ def ivfpq_topk(
     # PQ codebooks = first K_CODES of the same list.
     med_all = deterministic_medoids(df, max(k_clusters, K_CODES), id_col, vec_col)
     C = np.array([cv for _, cv in med_all[:k_clusters]], dtype=np.int64)
-    c_sq = (C * C).sum(axis=1)
     cb = pq_codebooks(df, id_col, vec_col, medoids=med_all)
-    cb_sq = (cb * cb).sum(axis=2)
 
     q_rows = (
         queries.select(
@@ -344,14 +347,9 @@ def ivfpq_topk(
     # probe lists: nprobe nearest coarse centroids per query, (d², cluster)
     # tie-break = np.argsort on the compound key via stable sort on cluster
     # index after primary d² (lexsort: last key is primary).
-    qd2 = (Qv * Qv).sum(axis=1, keepdims=True) - 2 * (Qv @ C.T) + c_sq
+    qd2 = sq_l2(Qv, C)
     probes = np.argsort(qd2, axis=1, kind="stable")[:, :nprobe]  # ties → lower cluster
-    Qs = Qv.reshape(len(Qv), M_SUB, SUB_DIM)
-    dt = (
-        (Qs * Qs).sum(axis=2)[:, :, None]
-        - 2 * np.einsum("qsd,skd->qsk", Qs, cb)
-        + cb_sq[None, :, :]
-    )
+    dt = _distance_tables(Qv.reshape(len(Qv), M_SUB, SUB_DIM), cb)
 
     base = df.select(F.col(id_col), quantize(F.col(vec_col)).alias("_qv"))
     id_field = base.schema[id_col]
@@ -369,18 +367,12 @@ def ivfpq_topk(
             X = np.stack(pdf["_qv"].to_numpy()).astype(np.int64)
             ids = pdf[id_col].to_numpy()
             # coarse assign (first-min argmin = (d², cluster) tie-break)
-            d2c = (X * X).sum(axis=1, keepdims=True) - 2 * (X @ C.T) + c_sq
-            clusters = d2c.argmin(axis=1)
+            clusters = sq_l2(X, C).argmin(axis=1)
             # PQ encode
             Xs = X.reshape(len(X), M_SUB, SUB_DIM)
             codes = np.empty((len(X), M_SUB), dtype=np.int64)
             for s in range(M_SUB):
-                d2 = (
-                    (Xs[:, s] * Xs[:, s]).sum(axis=1, keepdims=True)
-                    - 2 * (Xs[:, s] @ cb[s].T)
-                    + cb_sq[s]
-                )
-                codes[:, s] = d2.argmin(axis=1)
+                codes[:, s] = sq_l2(Xs[:, s], cb[s]).argmin(axis=1)
             for qi in range(len(q_ids)):
                 mask = np.isin(clusters, probes[qi]) & (ids != q_ids[qi])
                 if not mask.any():

@@ -160,14 +160,20 @@ def winnow_fingerprint_table(
 
     Lowercasing happens IN SPARK (the ``lower(text)`` projection), not
     Python: Python str.lower and JVM toLowerCase disagree on a handful
-    of Unicode mappings, and the oracle's semantics are Spark's."""
+    of Unicode mappings, and the oracle's semantics are Spark's.
+
+    Per-row cost is ~len(text) md5 calls, so a small single-file scan is
+    spread across cores first (``ensure_parallelism``: a no-op at real
+    multi-file scale). ``dedup.winnow_pairs`` is the pair stage on top."""
     import hashlib
 
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
 
-    base = df.filter(
+    from backend_fastapi_spark.operators.util import ensure_parallelism
+
+    base = ensure_parallelism(df, id_col).filter(
         F.length(F.lower(F.col(text_col))) >= k + w - 1
     ).select(F.col(id_col), F.lower(F.col(text_col)).alias("_tx"))
     id_field = df.schema[id_col]

@@ -1385,10 +1385,9 @@ def q_exact_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.exact_dup_groups(docs.unionByName(reingested))
 
 
-@register(
-    "ngram_jaccard_dupes",
-    oracle=f"""
-    WITH {_TOKS_CTE}, {_SHINGLES_CTE},
+# Oracle fragments shared by the Jaccard-verified families. ``inter``
+# holds each pair's shared-shingle count, ``cnt`` each document's set size.
+_CAPPED_INTER_SQL = """
     -- document-frequency cap: shingles in >64 docs are dropped from the
     -- universe before the self-join (hot-shingle skew guard)
     capped AS (
@@ -1399,11 +1398,37 @@ def q_exact_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     inter AS (
       SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_inter
       FROM capped a JOIN capped b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2)
-    SELECT id_a, id_b, n_inter,
-           CAST(n_inter AS DOUBLE) / CAST(ca.n + cb.n - n_inter AS DOUBLE) AS jaccard
-    FROM inter JOIN cnt ca ON id_a = ca.doc_id JOIN cnt cb ON id_b = cb.doc_id
-    WHERE CAST(n_inter AS DOUBLE) / CAST(ca.n + cb.n - n_inter AS DOUBLE) >= 0.8
+      GROUP BY 1, 2)"""
+_JACCARD_SQL = "CAST(n_inter AS DOUBLE) / CAST(ca.n + cb.n - n_inter AS DOUBLE)"
+_JACCARD_FROM_SQL = (
+    "FROM inter JOIN cnt ca ON id_a = ca.doc_id JOIN cnt cb ON id_b = cb.doc_id"
+)
+
+
+def _jaccard_pairs_sql(threshold: float) -> str:
+    return f"""pairs AS (
+      SELECT id_a, id_b {_JACCARD_FROM_SQL}
+      WHERE {_JACCARD_SQL} >= {threshold})"""
+
+
+# Connected components of ``pairs`` as min-label reachability.
+_CC_REACH_SQL = """edges AS (
+      SELECT id_a AS a, id_b AS b FROM pairs
+      UNION ALL SELECT id_b, id_a FROM pairs),
+    verts AS (SELECT DISTINCT a AS id FROM edges),
+    reach(id, lbl) AS (
+      SELECT id, id FROM verts
+      UNION
+      SELECT e.a, r.lbl FROM edges e JOIN reach r ON e.b = r.id)"""
+
+
+@register(
+    "ngram_jaccard_dupes",
+    oracle=f"""
+    WITH {_TOKS_CTE}, {_SHINGLES_CTE},{_CAPPED_INTER_SQL}
+    SELECT id_a, id_b, n_inter, {_JACCARD_SQL} AS jaccard
+    {_JACCARD_FROM_SQL}
+    WHERE {_JACCARD_SQL} >= 0.8
     """,
 )
 def q_ngram_jaccard_dupes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1474,11 +1499,7 @@ _INC_HITS_SQL = " UNION ".join(
     + " AND ".join(f"bb.sig_{4*b+r} = cc.sig_{4*b+r}" for r in range(4))
     for b in range(4)
 )
-
-
-@register(
-    "incremental_dedup_batch",
-    oracle=f"""
+_INC_ORACLE_SQL = f"""
     WITH {_TOKS_CTE}, {_SHINGLES_CTE}, {_INC_BATCH_SQL},
     toks_b AS (SELECT doc_id, string_split(lower(text), ' ') AS w FROM batch),
     sh_b AS (SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS shingle
@@ -1502,20 +1523,13 @@ _INC_HITS_SQL = " UNION ".join(
            a.first_match,
            COALESCE(a.n_matches, 0) = 0 AS accepted
     FROM batch b LEFT JOIN agg a ON b.doc_id = a.batch_id
-    """,
-)
-def q_incremental_dedup_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ingest-time dedup gate (operators/dedup.py::
-    incremental_minhash_dedup): a synthetic new batch — 10% of the corpus
-    re-ingested verbatim (must collide) and 10% with word order reversed
-    (novel shingle sets) — is MinHash-banded against the corpus
-    signatures ONLY (batch × corpus, never corpus × corpus). The
-    continuous-ingest counterpart of the backfill pair sweep
-    (minhash_lsh_candidates): per-batch cost is |batch| signatures + band
-    collisions against a persistable corpus signature table."""
-    from backend_fastapi_spark.operators.dedup import incremental_minhash_dedup
+    """
 
-    docs = _t(spark, sf_dir, "documents")
+
+def _ingest_batch(docs: DataFrame) -> DataFrame:
+    """The synthetic new batch of ``_INC_BATCH_SQL``: 10% of the corpus
+    re-ingested verbatim (must collide) and 10% with word order reversed
+    (novel shingle sets)."""
     verbatim = docs.filter(F.col("doc_id") % 10 == 0).select(
         (F.col("doc_id") + 2_000_000).alias("doc_id"), "text"
     )
@@ -1523,36 +1537,22 @@ def q_incremental_dedup_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") + 3_000_000).alias("doc_id"),
         F.concat_ws(" ", F.reverse(F.split(F.col("text"), " "))).alias("text"),
     )
-    batch = verbatim.unionByName(reversed_docs)
-    return incremental_minhash_dedup(docs, batch)
+    return verbatim.unionByName(reversed_docs)
 
 
-@register(
-    "incremental_dedup_via_state",
-    oracle=f"""
-    WITH {_TOKS_CTE}, {_SHINGLES_CTE}, {_INC_BATCH_SQL},
-    toks_b AS (SELECT doc_id, string_split(lower(text), ' ') AS w FROM batch),
-    sh_b AS (SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS shingle
-             FROM toks_b, LATERAL (SELECT unnest(generate_series(1, len(w)-2)) AS i) t
-             WHERE len(w) >= 3),
-    sig AS (SELECT doc_id, {_SIG_COLS_SQL} FROM sh GROUP BY doc_id),
-    sig_b AS (SELECT doc_id, {_SIG_COLS_SQL} FROM sh_b GROUP BY doc_id),
-    hits AS (SELECT DISTINCT batch_id, corpus_id FROM (
-      SELECT batch_id, corpus_id FROM ({_INC_HITS_SQL})
-      UNION ALL
-      SELECT b.doc_id AS batch_id, c.doc_id AS corpus_id
-      FROM batch b JOIN documents c ON md5(b.text) = md5(c.text)
-      WHERE b.doc_id NOT IN (SELECT doc_id FROM sig_b))),
-    agg AS (SELECT batch_id, COUNT(*) AS n_matches,
-                   MIN(corpus_id) AS first_match
-            FROM hits GROUP BY 1)
-    SELECT b.doc_id,
-           COALESCE(a.n_matches, 0) AS n_matches,
-           a.first_match,
-           COALESCE(a.n_matches, 0) = 0 AS accepted
-    FROM batch b LEFT JOIN agg a ON b.doc_id = a.batch_id
-    """,
-)
+@register("incremental_dedup_batch", oracle=_INC_ORACLE_SQL)
+def q_incremental_dedup_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Ingest-time dedup gate (operators/dedup.py::
+    incremental_minhash_dedup): the synthetic new batch is MinHash-banded
+    against the corpus signatures ONLY (batch × corpus, never corpus ×
+    corpus). The continuous-ingest counterpart of the backfill pair sweep
+    (minhash_lsh_candidates): per-batch cost is |batch| signatures + band
+    collisions against a persistable corpus signature table."""
+    docs = _t(spark, sf_dir, "documents")
+    return D.incremental_minhash_dedup(docs, _ingest_batch(docs))
+
+
+@register("incremental_dedup_via_state", oracle=_INC_ORACLE_SQL)
 def q_incremental_dedup_via_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SAME ingest gate as ``incremental_dedup_batch`` — same batch,
     same verdict schema, same oracle — but the corpus side enters as the
@@ -1562,29 +1562,13 @@ def q_incremental_dedup_via_state(spark: SparkSession, sf_dir: str) -> DataFrame
     (streaming/ingest_stream.py::curate_batch persists/rebuilds this
     state per micro-batch). A green hash here is the proof that the
     state-fed gate is verdict-identical to the text-fed gate."""
-    from backend_fastapi_spark.operators.dedup import (
-        dedup_state,
-        incremental_minhash_dedup,
-    )
-
     docs = _t(spark, sf_dir, "documents")
-    verbatim = docs.filter(F.col("doc_id") % 10 == 0).select(
-        (F.col("doc_id") + 2_000_000).alias("doc_id"), "text"
-    )
-    reversed_docs = docs.filter(F.col("doc_id") % 10 == 1).select(
-        (F.col("doc_id") + 3_000_000).alias("doc_id"),
-        F.concat_ws(" ", F.reverse(F.split(F.col("text"), " "))).alias("text"),
-    )
-    batch = verbatim.unionByName(reversed_docs)
-    return incremental_minhash_dedup(
-        None, batch, corpus_state=dedup_state(docs)
+    return D.incremental_minhash_dedup(
+        None, _ingest_batch(docs), corpus_state=D.dedup_state(docs)
     )
 
 
-@register(
-    "minhash_verified_dupes",
-    oracle=f"""
-    WITH {_TOKS_CTE}, {_SHINGLES_CTE},
+_MINHASH_INTER_SQL = f"""
     sig AS (SELECT doc_id, {_SIG_COLS_SQL} FROM sh GROUP BY doc_id),
     cand AS ({_BAND_JOINS_SQL}),
     cnt AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
@@ -1593,48 +1577,22 @@ def q_incremental_dedup_via_state(spark: SparkSession, sf_dir: str) -> DataFrame
       FROM cand c
       JOIN sh a ON a.doc_id = c.id_a
       JOIN sh b ON b.doc_id = c.id_b AND b.shingle = a.shingle
-      GROUP BY 1, 2)
-    SELECT id_a, id_b,
-           CAST(n_inter AS DOUBLE) / CAST(ca.n + cb.n - n_inter AS DOUBLE) AS jaccard
-    FROM inter JOIN cnt ca ON id_a = ca.doc_id JOIN cnt cb ON id_b = cb.doc_id
-    WHERE CAST(n_inter AS DOUBLE) / CAST(ca.n + cb.n - n_inter AS DOUBLE) >= 0.7
+      GROUP BY 1, 2)"""
+
+
+@register(
+    "minhash_verified_dupes",
+    oracle=f"""
+    WITH {_TOKS_CTE}, {_SHINGLES_CTE},{_MINHASH_INTER_SQL}
+    SELECT id_a, id_b, {_JACCARD_SQL} AS jaccard
+    {_JACCARD_FROM_SQL}
+    WHERE {_JACCARD_SQL} >= 0.7
     """,
 )
 def q_minhash_verified_dupes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The production two-stage dedup: MinHash-LSH candidate generation
-    (cheap, band equi-joins) followed by exact Jaccard verification computed
-    ONLY over candidate pairs — never all-pairs. At 100 TB the verify join
-    touches |candidates|·shingles rows, a vanishing fraction of the corpus."""
-    return _minhash_verified_pairs(_t(spark, sf_dir, "documents"))
-
-
-def _minhash_verified_pairs(docs: DataFrame, threshold: float = 0.7) -> DataFrame:
-    """(id_a, id_b, jaccard) — MinHash band collisions exact-verified at
-    ``jaccard >= threshold``. Shared by ``minhash_verified_dupes`` and
-    the scale-path clustering feed ``dup_clusters_minhash``."""
-    cands = D.minhash_lsh_pairs(docs)
-    sh = D.shingle_table(docs)
-    cnt = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a = sh.select(F.col("doc_id").alias("id_a"), "shingle")
-    b = sh.select(F.col("doc_id").alias("id_b"), "shingle")
-    inter = (
-        cands.join(a, "id_a")
-        .join(b, ["id_b", "shingle"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    ca = cnt.select(F.col("doc_id").alias("id_a"), F.col("n").alias("n_a"))
-    cb = cnt.select(F.col("doc_id").alias("id_b"), F.col("n").alias("n_b"))
-    jac = F.col("n_inter").cast("double") / (
-        F.col("n_a") + F.col("n_b") - F.col("n_inter")
-    ).cast("double")
-    return (
-        inter.join(ca, "id_a")
-        .join(cb, "id_b")
-        .withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    """The production two-stage dedup (``dedup.minhash_verified_pairs``):
+    MinHash-LSH candidates, exact Jaccard verified only over them."""
+    return D.minhash_verified_pairs(_t(spark, sf_dir, "documents"))
 
 
 @register(
@@ -1703,19 +1661,6 @@ _WINNOW_CTE = f"""
            FROM wg)"""
 
 
-def _winnow_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, n_kgrams, fps) via the Arrow-batched winnowing substrate
-    (operators/text.py::winnow_fingerprint_table — r7 port of the
-    interpreted-HOF expression form the sf10 stanza showed dominating;
-    same oracle, parity-tested against the expression twin)."""
-    from backend_fastapi_spark.operators.util import ensure_parallelism
-
-    # Per-row cost is ~len(text) md5 calls: spread small single-file
-    # scans across cores (no-op at real multi-file scale).
-    docs = ensure_parallelism(_t(spark, sf_dir, "documents"), "doc_id")
-    return TX.winnow_fingerprint_table(docs, _WINNOW_K, _WINNOW_W)
-
-
 @register(
     "winnow_fingerprint_stats",
     oracle=f"""
@@ -1730,7 +1675,9 @@ def q_winnow_fingerprint_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     count is ~1/w of the k-gram count — the compression the scheme buys
     at corpus scale. One scan, zero shuffles, no UDF (the window minimum
     is a lexicographic array_min over named-column hash arrays)."""
-    fps = _winnow_fps(spark, sf_dir)
+    fps = TX.winnow_fingerprint_table(
+        _t(spark, sf_dir, "documents"), _WINNOW_K, _WINNOW_W
+    )
     return fps.select(
         "doc_id",
         "n_kgrams",
@@ -1754,45 +1701,11 @@ def q_winnow_fingerprint_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_winnow_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Substring-level near-duplicate pairs via shared winnowing
-    fingerprints — the fourth dedup family (shingle-Jaccard, MinHash,
-    SimHash are word-level; winnowing guarantees detection of any shared
-    run ≥ k + w - 1 chars, the plagiarism/contamination detector's
-    contract).
-
-    Scale shape: explode only the winnowed set (~1/w of k-grams), prune
-    stop-fingerprints by document frequency with a broadcast anti-join
-    (the heavy-hitter list is tiny by construction), then one equi-join
-    on fingerprint + one pair-count shuffle. No all-pairs product."""
-    from backend_fastapi_spark.operators.util import materialize
-
-    # Materialize (doc_id, fps) BEFORE the explode, for two reasons:
-    # it feeds the heavy-hitter agg AND both self-join sides (re-eval
-    # would re-run the md5 transform up to 4x), and — the sharper one —
-    # InferFiltersFromGenerate puts `size(fps) > 0` UNDER the explode;
-    # against live lineage that predicate inlines the whole winnow
-    # transform and pushes through the repartition into the
-    # single-partition scan stage (measured: a 10-minute one-core
-    # straggler). Against the checkpointed relation it is a cheap
-    # attribute test.
-    e = materialize(_winnow_fps(spark, sf_dir)).select(
-        "doc_id", F.explode("fps").alias("fp")
-    )
-    common = (
-        e.groupBy("fp")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") > _WINNOW_MAXDF)
-        .select("fp")
-    )
-    pruned = e.join(F.broadcast(common), "fp", "left_anti")
-    # Group-local pair generation (operators/dedup.py::grouped_pairs):
-    # fingerprint groups are bounded at _WINNOW_MAXDF rows by the
-    # anti-join, so one shuffle into per-fp doc lists replaces the
-    # self-join's two shuffles of the exploded fingerprint table.
-    return (
-        D.grouped_pairs(pruned, "fp", "doc_id")
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
-        .filter(F.col("n_shared") >= _WINNOW_MIN_SHARED)
+    fingerprints (``dedup.winnow_pairs``) — the fourth dedup family
+    (shingle-Jaccard, MinHash, SimHash are word-level)."""
+    return D.winnow_pairs(
+        _t(spark, sf_dir, "documents"), _WINNOW_K, _WINNOW_W,
+        _WINNOW_MAXDF, _WINNOW_MIN_SHARED,
     )
 
 
@@ -3862,19 +3775,10 @@ def q_customer_360(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# 64-bit SimHash as 4 × 16-bit band columns. Hyperplane bit g (0..63)
-# comes from md5(shingle) nibble g//2: even g reads the nibble's bit 3,
-# odd g its bit 2 — 64 independent public hash bits from ONE md5 per
-# shingle row (identical digest in both engines). Band-key cardinality
-# 2^16 keeps pigeonhole buckets ~n/65536: the scale-safe shape (the
-# earlier 16-bit signature put ~n/64 docs per bucket → O(n²/64)
-# candidates).
-_SIMHASH_BANDS = 4
-_SIMHASH_BAND_BITS = 16
-
-
-# hs CTE projects the md5 digest ONCE per row; the 64 bit-aggregates then
-# read substrings of it — not 64 md5 evaluations per shingle.
+# SimHash oracle: the 64 md5-nibble bits of dedup.simhash_pairs as
+# D.SIMHASH_BANDS band columns. The hs CTE projects the md5 digest ONCE
+# per row; the 64 bit-aggregates then read substrings of it — not 64 md5
+# evaluations per shingle.
 _SIMHASH_HASH_CTE = "hs AS (SELECT doc_id, md5(shingle) AS h0 FROM sh)"
 
 # hex chars whose nibble has bit 3 set / bit 2 set
@@ -3893,19 +3797,19 @@ _SIMHASH_BAND_SQL = ", ".join(
         f"CASE WHEN SUM(CASE WHEN {_simhash_bit_sql(16 * k + j)} "
         f"THEN 1 ELSE -1 END) > 0 "
         f"THEN {1 << j} ELSE 0 END"
-        for j in range(_SIMHASH_BAND_BITS)
+        for j in range(D.SIMHASH_BAND_BITS)
     )
     + f") AS band{k}"
-    for k in range(_SIMHASH_BANDS)
+    for k in range(D.SIMHASH_BANDS)
 )
 _SIMHASH_HAMMING_SQL = " + ".join(
     f"bit_count(CAST(xor(a.band{k}, b.band{k}) AS BIGINT))"
-    for k in range(_SIMHASH_BANDS)
+    for k in range(D.SIMHASH_BANDS)
 )
 _SIMHASH_CAND_SQL = " UNION ".join(
     f"SELECT a.doc_id AS id_a, b.doc_id AS id_b FROM sig a JOIN sig b "
     f"ON a.band{k} = b.band{k} AND a.doc_id < b.doc_id"
-    for k in range(_SIMHASH_BANDS)
+    for k in range(D.SIMHASH_BANDS)
 )
 
 
@@ -3922,114 +3826,9 @@ _SIMHASH_CAND_SQL = " UNION ".join(
 )
 def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash(64-bit, md5-nibble hyperplanes) near-dup pairs with Hamming
-    distance ≤ 3 — the third dedup family (bit-signature, constant-size).
-
-    Pigeonhole banding: the signature lives as 4 × 16-bit band columns;
-    any pair at Hamming ≤ 3 agrees on at least one full band, so 4
-    band-key equi-joins (cardinality 2^16 each) find every qualifying
-    pair, then the exact Hamming filter verifies. No all-pairs join, no
-    single-band hot bucket."""
-    from backend_fastapi_spark.operators.util import materialize
-
-    # Parse the ONE md5 digest per shingle into 4 × 32-bit integer chunks
-    # (8 hex chars via conv); every hyperplane bit is then a shift-and —
-    # integer codegen, not 64 substring+IN string comparisons per shingle
-    # row. The .cache() on the raw shingle plan makes this the same shared
-    # substrate the Jaccard/MinHash queries evaluate (CacheManager
-    # plan-matches it).
-    md5col = F.md5("shingle")
-    sh = (
-        D.shingle_table(_t(spark, sf_dir, "documents"))
-        .cache()
-        .select(
-            "doc_id",
-            *[
-                F.conv(F.substring(md5col, 8 * c + 1, 8), 16, 10)
-                .cast("long")
-                .alias(f"c{c}")
-                for c in range(4)
-            ],
-        )
-    )
-
-    def bit(g: int):
-        # Oracle bit g = bit (3 - g%2) of hex nibble g//2. Nibble i sits
-        # in chunk i//8 at hex position i%8, so its bit b is bit
-        # 4*(7 - i%8) + b of the 32-bit chunk value.
-        i = g // 2
-        shift = 4 * (7 - i % 8) + (3 - g % 2)
-        return F.shiftright(F.col(f"c{i // 8}"), shift).bitwiseAND(F.lit(1))
-
-    bit_sums = [
-        F.sum(bit(g)).alias(f"s{g}") for g in range(_SIMHASH_BANDS * _SIMHASH_BAND_BITS)
-    ]
-    # SUM(+1/-1 per bit) > 0  ⇔  2 * SUM(bit) > COUNT(*)
-    band_cols = [
-        sum(
-            [
-                F.when(
-                    F.col(f"s{16 * k + j}") * 2 > F.col("_n"), F.lit(1 << j)
-                ).otherwise(0)
-                for j in range(_SIMHASH_BAND_BITS)
-            ],
-            F.lit(0),
-        ).alias(f"band{k}")
-        for k in range(_SIMHASH_BANDS)
-    ]
-    # 1 row/doc, read by every band join — materialize once (reliable
-    # checkpoint when a checkpoint dir is set; localCheckpoint on local[*])
-    sigs = materialize(
-        sh.groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("_n"), *bit_sums)
-        .select("doc_id", *band_cols)
-    )
-
-    # ONE equi-join on an exploded (band_idx, band_value) key instead of
-    # 4 separate self-joins + union: same collision set (a pair agreeing
-    # on band k meets at key (k, v)), 1/4 the join stages and one shuffle
-    # of the 4n-row exploded sig table instead of four of the n-row one.
-    # The keyed explode CARRIES the full 4-band signature on every row
-    # (4 extra ints), so the collision join yields both pair signatures
-    # directly and the exact Hamming verify runs INLINE on the join
-    # output — the previous form re-joined the pair set against sigs
-    # twice (two more joins + scans) just to fetch the bands back.
-    # Hamming is a function of the pair, so distinct-after-verify equals
-    # the previous distinct-before-verify row set, over fewer rows.
-    keyed = sigs.select(
-        "doc_id",
-        *[F.col(f"band{k}") for k in range(_SIMHASH_BANDS)],
-        F.posexplode(
-            F.array(*[F.col(f"band{k}") for k in range(_SIMHASH_BANDS)])
-        ).alias("band_idx", "band_val"),
-    )
-    hamming = sum(
-        [
-            F.bit_count(
-                F.col(f"a{k}").bitwiseXOR(F.col(f"b{k}")).cast("long")
-            )
-            for k in range(_SIMHASH_BANDS)
-        ],
-        F.lit(0),
-    ).cast("long")
-    return (
-        keyed.select(
-            F.col("doc_id").alias("id_a"), "band_idx", "band_val",
-            *[F.col(f"band{k}").alias(f"a{k}") for k in range(_SIMHASH_BANDS)],
-        )
-        .join(
-            keyed.select(
-                F.col("doc_id").alias("id_b"), "band_idx", "band_val",
-                *[F.col(f"band{k}").alias(f"b{k}")
-                  for k in range(_SIMHASH_BANDS)],
-            ),
-            ["band_idx", "band_val"],
-        )
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= 3)
-        .select("id_a", "id_b", "hamming")
-        .distinct()
-    )
+    distance ≤ 3 (``dedup.simhash_pairs``) — the third dedup family
+    (bit-signature, constant-size)."""
+    return D.simhash_pairs(_t(spark, sf_dir, "documents"))
 
 
 @register(
@@ -5617,28 +5416,9 @@ def q_pii_scrub_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dup_clusters",
     oracle=f"""
-    WITH RECURSIVE {_TOKS_CTE}, {_SHINGLES_CTE},
-    capped AS (
-      SELECT sh.doc_id, sh.shingle FROM sh
-      JOIN (SELECT shingle FROM sh GROUP BY 1 HAVING COUNT(*) <= 64) keep
-      USING (shingle)),
-    cnt AS (SELECT doc_id, COUNT(*) AS n FROM capped GROUP BY 1),
-    inter AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_inter
-      FROM capped a JOIN capped b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2),
-    pairs AS (
-      SELECT id_a, id_b FROM inter
-      JOIN cnt ca ON id_a = ca.doc_id JOIN cnt cb ON id_b = cb.doc_id
-      WHERE CAST(n_inter AS DOUBLE) / CAST(ca.n + cb.n - n_inter AS DOUBLE) >= 0.8),
-    edges AS (
-      SELECT id_a AS a, id_b AS b FROM pairs
-      UNION ALL SELECT id_b, id_a FROM pairs),
-    verts AS (SELECT DISTINCT a AS id FROM edges),
-    reach(id, lbl) AS (
-      SELECT id, id FROM verts
-      UNION
-      SELECT e.a, r.lbl FROM edges e JOIN reach r ON e.b = r.id)
+    WITH RECURSIVE {_TOKS_CTE}, {_SHINGLES_CTE},{_CAPPED_INTER_SQL},
+    {_jaccard_pairs_sql(0.8)},
+    {_CC_REACH_SQL}
     SELECT id AS doc_id, CAST(MIN(lbl) AS BIGINT) AS cluster_id
     FROM reach GROUP BY id
     """,
@@ -5649,38 +5429,15 @@ def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dup edge list. cluster_id = min doc_id in the component — the
     canonical survivor each member maps to. Oracle: DuckDB recursive CTE
     computing reachability min-labels over the same edges."""
-    docs = _t(spark, sf_dir, "documents")
-    edges = D.ngram_jaccard_pairs(docs, 0.8, max_shingle_df=64).select("id_a", "id_b")
-    return D.connected_components(edges).select(
-        F.col("id").alias("doc_id"), "cluster_id"
-    )
+    return D.dup_clusters(_t(spark, sf_dir, "documents"))
 
 
 @register(
     "dup_clusters_minhash",
     oracle=f"""
-    WITH RECURSIVE {_TOKS_CTE}, {_SHINGLES_CTE},
-    sig AS (SELECT doc_id, {_SIG_COLS_SQL} FROM sh GROUP BY doc_id),
-    cand AS ({_BAND_JOINS_SQL}),
-    cnt AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
-    inter AS (
-      SELECT c.id_a, c.id_b, COUNT(*) AS n_inter
-      FROM cand c
-      JOIN sh a ON a.doc_id = c.id_a
-      JOIN sh b ON b.doc_id = c.id_b AND b.shingle = a.shingle
-      GROUP BY 1, 2),
-    pairs AS (
-      SELECT id_a, id_b FROM inter
-      JOIN cnt ca ON id_a = ca.doc_id JOIN cnt cb ON id_b = cb.doc_id
-      WHERE CAST(n_inter AS DOUBLE) / CAST(ca.n + cb.n - n_inter AS DOUBLE) >= 0.7),
-    edges AS (
-      SELECT id_a AS a, id_b AS b FROM pairs
-      UNION ALL SELECT id_b, id_a FROM pairs),
-    verts AS (SELECT DISTINCT a AS id FROM edges),
-    reach(id, lbl) AS (
-      SELECT id, id FROM verts
-      UNION
-      SELECT e.a, r.lbl FROM edges e JOIN reach r ON e.b = r.id)
+    WITH RECURSIVE {_TOKS_CTE}, {_SHINGLES_CTE},{_MINHASH_INTER_SQL},
+    {_jaccard_pairs_sql(0.7)},
+    {_CC_REACH_SQL}
     SELECT id AS doc_id, CAST(MIN(lbl) AS BIGINT) AS cluster_id
     FROM reach GROUP BY id
     """,
@@ -5695,38 +5452,17 @@ def q_dup_clusters_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     differ from ``dup_clusters`` only where LSH banding misses a
     true-Jaccard pair (16 hashes / 4-row bands ⇒ recall ~1 - (1-J⁴)⁴:
     ≥ 0.94 at J = 0.7, → 1 as J → 1)."""
-    docs = _t(spark, sf_dir, "documents")
-    edges = _minhash_verified_pairs(docs).select("id_a", "id_b")
-    return D.connected_components(edges).select(
-        F.col("id").alias("doc_id"), "cluster_id"
+    return D.pair_clusters(
+        D.minhash_verified_pairs(_t(spark, sf_dir, "documents"))
     )
 
 
 @register(
     "dedup_canonical_corpus",
     oracle=f"""
-    WITH RECURSIVE {_TOKS_CTE}, {_SHINGLES_CTE},
-    capped AS (
-      SELECT sh.doc_id, sh.shingle FROM sh
-      JOIN (SELECT shingle FROM sh GROUP BY 1 HAVING COUNT(*) <= 64) keep
-      USING (shingle)),
-    cnt AS (SELECT doc_id, COUNT(*) AS n FROM capped GROUP BY 1),
-    inter AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_inter
-      FROM capped a JOIN capped b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2),
-    pairs AS (
-      SELECT id_a, id_b FROM inter
-      JOIN cnt ca ON id_a = ca.doc_id JOIN cnt cb ON id_b = cb.doc_id
-      WHERE CAST(n_inter AS DOUBLE) / CAST(ca.n + cb.n - n_inter AS DOUBLE) >= 0.8),
-    edges AS (
-      SELECT id_a AS a, id_b AS b FROM pairs
-      UNION ALL SELECT id_b, id_a FROM pairs),
-    verts AS (SELECT DISTINCT a AS id FROM edges),
-    reach(id, lbl) AS (
-      SELECT id, id FROM verts
-      UNION
-      SELECT e.a, r.lbl FROM edges e JOIN reach r ON e.b = r.id),
+    WITH RECURSIVE {_TOKS_CTE}, {_SHINGLES_CTE},{_CAPPED_INTER_SQL},
+    {_jaccard_pairs_sql(0.8)},
+    {_CC_REACH_SQL},
     removed AS (
       SELECT id FROM (SELECT id, MIN(lbl) AS lbl FROM reach GROUP BY id)
       WHERE id != lbl)
@@ -5741,11 +5477,10 @@ def q_dedup_canonical_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     side of the connected components; at scale the removed set is a tiny
     fraction of the corpus, so the anti-join broadcasts."""
     docs = _t(spark, sf_dir, "documents")
-    edges = D.ngram_jaccard_pairs(docs, 0.8, max_shingle_df=64).select("id_a", "id_b")
     removed = (
-        D.connected_components(edges)
-        .filter(F.col("id") != F.col("cluster_id"))
-        .select(F.col("id").alias("doc_id"))
+        D.dup_clusters(docs)
+        .filter(F.col("doc_id") != F.col("cluster_id"))
+        .select("doc_id")
     )
     return docs.join(F.broadcast(removed), "doc_id", "left_anti").select(
         "doc_id", "lang", "n_chars"
@@ -6529,20 +6264,8 @@ def q_branded_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dup_rate_by_source",
     oracle=f"""
-    WITH {_TOKS_CTE}, {_SHINGLES_CTE},
-    capped AS (
-      SELECT sh.doc_id, sh.shingle FROM sh
-      JOIN (SELECT shingle FROM sh GROUP BY 1 HAVING COUNT(*) <= 64) keep
-      USING (shingle)),
-    cnt AS (SELECT doc_id, COUNT(*) AS n FROM capped GROUP BY 1),
-    inter AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_inter
-      FROM capped a JOIN capped b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2),
-    pairs AS (
-      SELECT id_a, id_b FROM inter
-      JOIN cnt ca ON id_a = ca.doc_id JOIN cnt cb ON id_b = cb.doc_id
-      WHERE CAST(n_inter AS DOUBLE) / CAST(ca.n + cb.n - n_inter AS DOUBLE) >= 0.8),
+    WITH {_TOKS_CTE}, {_SHINGLES_CTE},{_CAPPED_INTER_SQL},
+    {_jaccard_pairs_sql(0.8)},
     members AS (
       SELECT DISTINCT id FROM (
         SELECT id_a AS id FROM pairs UNION ALL SELECT id_b FROM pairs))

@@ -59,7 +59,7 @@ def read_binary_dir(
         F.lit("binary"),
     )
     # 60-bit deterministic id from the path: first 15 hex chars of md5
-    # (15 x 4 bits; same idiom dedup.py:304 documents as 60-bit).
+    # (15 x 4 bits; the idiom dedup.MINHASH_P's comment documents as 60-bit).
     media_id = F.conv(F.substring(F.md5("path"), 1, 15), 16, 10).cast("long")
     return raw.select(
         media_id.alias("media_id"),

@@ -7,7 +7,8 @@ literals that are not docstrings count as code.
 Usage: python scripts/code_lines.py [package_dir] [relative_file ...]
 
 Prints the package total, preceded by the count of each named file
-(paths relative to the package) — the figure net-line claims quote.
+(paths relative to the package) and the subtotals of ``operators/`` and
+``queries.py`` — the figures net-line claims quote.
 """
 
 from __future__ import annotations
@@ -23,6 +24,7 @@ _NOT_CODE = {
     tokenize.INDENT, tokenize.DEDENT, tokenize.ENDMARKER,
 }
 _DOC_OWNERS = (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)
+SUBTOTALS = ("operators/", "queries.py")
 
 
 def code_lines(path: pathlib.Path) -> int:
@@ -50,6 +52,8 @@ def main(argv: list[str]) -> None:
     }
     for name in argv[1:]:
         print(name, counts.get(name, 0))
+    for part in SUBTOTALS:
+        print(part, sum(n for f, n in counts.items() if f.startswith(part)))
     print("total", sum(counts.values()))
 
 

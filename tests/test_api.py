@@ -3,11 +3,13 @@
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from backend_fastapi_spark.operators import vector as V
 from backend_fastapi_spark.operators.ivf import build_ivf, ivf_search
 from tests.conftest import SF_ORACLE
+from tests.parity import compare, duck_con
 
 
 def _rows(df):
@@ -1528,6 +1530,33 @@ def test_grouped_pairs_matches_join_form_and_tolerates_dups(spark):
     assert (2, 6) in got and all(x != y for x, y in got)
 
 
+@pytest.mark.parametrize("min_bytes", [0, 1 << 62], ids=["grouped", "join"])
+@pytest.mark.parametrize(
+    "name", ["ngram_jaccard_dupes", "winnow_near_dup", "dup_clusters"]
+)
+def test_collision_pairs_forms_match_oracle(spark, monkeypatch, name, min_bytes):
+    """Both physical forms of ``dedup.collision_pairs`` give the oracle's
+    rows: a crossover of 0 sends every capped family to the grouped form,
+    one of 2^62 to the self-join. At sf0.01 the registry alone only ever
+    reaches the self-join."""
+    from backend_fastapi_spark import queries as Q
+    from backend_fastapi_spark.operators import dedup as D
+
+    monkeypatch.setattr(D, "GROUPED_PAIRS_MIN_INPUT_BYTES", min_bytes)
+    spec = Q.REGISTRY[name]
+    con = duck_con(SF_ORACLE)
+    try:
+        oracle = con.execute(spec.oracle).fetchdf()
+    finally:
+        con.close()
+    sdf = spec.fn(spark, SF_ORACLE)
+    if name != "dup_clusters":  # its rows come from the driver union-find
+        plan = sdf._jdf.queryExecution().executedPlan().toString()
+        assert ("posexplode" in plan) == (min_bytes == 0), plan
+    problems = compare(sdf, oracle, name)
+    assert not problems, "\n".join(problems)
+
+
 def test_probed_clusters_distinguishes_empty_from_over_bound(spark):
     from backend_fastapi_spark.operators.ivf import _probed_clusters
 
@@ -1587,13 +1616,16 @@ def test_ivf_distributed_probe_matches_driver_probe(spark, tmp_path, monkeypatch
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_embedding")
     )
 
-    def searches():
-        return (
-            _rows(I.ivf_search_persisted(spark, path, queries, k=5, nprobe=3)),
-            _rows(I.ivf_search_persisted_adaptive(
-                spark, path, queries, k=5, nprobe_max=3
-            )),
+    def persisted():
+        return I.ivf_search_persisted(spark, path, queries, k=5, nprobe=3)
+
+    def adaptive():
+        return I.ivf_search_persisted_adaptive(
+            spark, path, queries, k=5, nprobe_max=3
         )
+
+    def searches():
+        return _rows(persisted()), _rows(adaptive())
 
     fast = searches()
     plans = []
@@ -1612,3 +1644,15 @@ def test_ivf_distributed_probe_matches_driver_probe(spark, tmp_path, monkeypatch
     assert len(fast[0]) == 15 and slow == fast
     windowed = [p for p in plans if "Window" in p and "cluster" in p]
     assert windowed and not any("Coalesce 1" in p for p in windowed)
+
+    # every query probes at least one cluster, so 2 pairs is over the
+    # collect bound for both: the probe plan runs twice while the search
+    # is built (the bounded collect, then the distinct probed ids), and
+    # the join form scores the same rows
+    monkeypatch.setattr(I, "_PROBE_DRIVER_MAX_PAIRS", 2)
+    for search, want in zip((persisted, adaptive), fast):
+        plans.clear()
+        df = search()
+        probe_collects = [p for p in plans if "Window" in p and "cluster" in p]
+        assert len(probe_collects) == 2, probe_collects
+        assert _rows(df) == want

@@ -84,9 +84,19 @@ def _rp_near_dup(spark):
 
 
 def _semdedup(spark):
+    # pre-assigned to one cluster: the coarse assignment of the same
+    # vectors raises first (the assign_arrow case), so the Gram is reached
+    # only past it
+    from backend_fastapi_spark.operators.kernel import quantize
     from backend_fastapi_spark.operators.semdedup import semantic_dedup_pairs
 
-    return semantic_dedup_pairs(_corpus(spark), 1, k_clusters=1)
+    corpus = _corpus(spark)
+    assigned = corpus.select(
+        "vec_id",
+        quantize(F.col("embedding")).alias("_qv"),
+        F.lit(0).alias("cluster"),
+    )
+    return semantic_dedup_pairs(corpus, 1, k_clusters=1, assigned=assigned)
 
 
 def _mmr(spark, query):
@@ -102,6 +112,18 @@ def _mmr(spark, query):
     return mmr_topk(corpus, queries, shortlist=3, select=2)
 
 
+def _assign_arrow(spark):
+    # int64 |q|² − 2q·c + |c|² wraps here: argmin picked cluster 1, while
+    # the exact distances are 4e8 (cluster 0) and ~1.8e19 (cluster 1)
+    from backend_fastapi_spark.operators.ivf import _assign_arrow
+
+    q = 3037000500
+    base = spark.createDataFrame(
+        [(0, [q, q])], "vec_id long, _qv array<bigint>"
+    )
+    return _assign_arrow(base, [(0, [q, 3036980500]), (1, [0, 0])], "vec_id")
+
+
 # (scorer, a trace of the frame — or for sq8 the message — where the
 # envelope must fire, so each case reaches the scorer it names)
 CASES = {
@@ -113,6 +135,7 @@ CASES = {
     "ivf_search_over": (_ivf_search_over, "in score\n"),
     "rp_near_dup_pairs": (_rp_near_dup, "in score_group\n"),
     "semantic_dedup_pairs": (_semdedup, "in pairs\n"),
+    "assign_arrow": (_assign_arrow, "in assign\n"),
     # all three vectors and the query past the envelope: the shortlist's
     # knn_exact stops first
     "mmr_topk": (lambda s: _mmr(s, [3000.0, 0.0]), "in score\n"),
